@@ -1,8 +1,9 @@
-"""The staged Spark KG-construction pipeline.
+"""The Spark KG-construction pipeline.
 
 source (repo, path, commit, lang, content)            [Iceberg/parquet scan]
-  -> segments   mapInPandas(segment_kernel)           [narrow, no shuffle]
-  -> mentions   mapInPandas(mention_kernel)           [narrow, no shuffle]
+  -> front end  mapInPandas(segment_kernel ->         [narrow, no shuffle]
+                mention_kernel): mentions + one
+                marker row per segment
   -> entities + alias dict   groupBy(norm)            [one small shuffle]
   -> links      broadcast join + batched scoring UDF  [map-side join]
   -> canonical  blocked similarity CC                 [one block shuffle]
@@ -10,9 +11,10 @@ source (repo, path, commit, lang, content)            [Iceberg/parquet scan]
 
 Scale design (the reason this layout wins at 100 TB / 1000 executors):
 
-- Segmentation & mention detection are *row-local* — expressed as
-  ``mapInPandas`` so the scan -> segments -> mentions chain is a single
-  narrow stage: zero shuffles until the first aggregation. The reference
+- Segmentation & mention detection are *row-local* — one fused
+  ``mapInPandas`` pass (:func:`fused_mentions_of`), so the scan -> mentions
+  chain is a single narrow stage: zero shuffles until the first
+  aggregation, and segment text never leaves the Python worker. The reference
   crossed a process + filesystem boundary at every one of these hops
   (pickle files per page, `cosmos/ingestion/ingest/process/process_page.py:52-54`).
 - The alias dictionary is tiny relative to mentions (distinct defined
@@ -21,11 +23,11 @@ Scale design (the reason this layout wins at 100 TB / 1000 executors):
   in-memory UMLS candidate KB, `link.py:11-39`).
 - Per-file skew is a non-issue (group key is (repo, path), never bare
   ``repo``); AQE skew-join splitting covers residual shuffle skew.
-- Canonicalization blocks entities on a name prefix: similarity edges
-  cannot cross blocks, so connected components runs block-locally in one
-  ``applyInPandas`` shuffle (the scale replacement for `link.py:113`
-  drop_duplicates). The general iterative min-label CC lives in
-  :mod:`cosmos_spark.operators.graph` for cross-block edge relations.
+- Canonicalization blocks entities on trigram-MinHash bands, verifies
+  candidates by exact trigram Jaccard and joins them by connected
+  components (the scale replacement for `link.py:113` drop_duplicates),
+  on the driver while the dim fits and with the iterative star CC of
+  :mod:`cosmos_spark.operators.graph` beyond that (:func:`canonicalize`).
 """
 
 from __future__ import annotations
@@ -163,11 +165,12 @@ def fused_mentions_of(source: DataFrame) -> DataFrame:
     The seg -> mention hop stays inside the Python worker, so segment text
     never crosses the Arrow boundary, is never cached, and the whole
     front-end is one stage instead of two. The marker rows carry exactly
-    the columns the member_of branch needs (repo, path, seg_id), replacing
-    the segments relation for triple assembly — the relation this saves
-    from materialization is ~3x the source in rows and carries every
-    segment's full text. Kernels are unchanged (same bytes as the staged
-    path; tests compare both against the oracle)."""
+    the columns the member_of branch needs (repo, path, seg_id, and a
+    score of 1.0), replacing the segments relation for triple assembly —
+    the relation this saves from materialization is ~3x the source in rows
+    and carries every segment's full text. This is the only KG front end:
+    the batch pipeline, the resumable runner, incremental maintenance and
+    streaming all assemble triples from its output."""
     src = source
     if "content_sha256" not in src.columns:
         src = src.withColumn("content_sha256", F.sha2(F.col("content"), 256))
@@ -299,13 +302,10 @@ def link_mentions(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
         .withColumn("alias_key",
                     _alias_norm_col(F.substring_index(F.col("mention_text"), ".", -1)))
     )
-    cols = ["repo", "path", "seg_id", "mention_id", "entity_id",
-            "multi_key"]
-    if "link_rep" in base.columns:
-        cols.append("link_rep")
     return (
         base.join(F.broadcast(best), "alias_key", "inner")
-        .select(*cols, F.col("link_score").alias("score"))
+        .select("repo", "path", "seg_id", "mention_id", "entity_id",
+                "multi_key", "link_rep", F.col("link_score").alias("score"))
         .withColumn("linked", F.col("score") > F.lit(K.LINK_THRESHOLD))
     )
 
@@ -427,86 +427,53 @@ def _driver_union_find(rows) -> list[tuple[str, str]]:
     return _union_find_mapping(edges, name)
 
 
-def _driver_canonical_mapping(
-        rows,
-        num_hashes: int = CANON_NUM_HASHES,
-        max_bucket: int = CANON_MAX_BUCKET) -> list[tuple[str, str]]:
+def _driver_canonical_mapping(rows) -> list[tuple[str, str]]:
     """Driver-side twin of ``canonical_candidate_pairs`` + union-find, run
     when the entities dim itself fits on the driver (the adaptive fast
     path of :func:`canonicalize`).
 
-    Same algorithm, vectorized in numpy instead of Catalyst HOFs: per-name
-    trigram sets (``kernels._trigrams`` — identical to the SQL trigram
-    expression), ``num_hashes`` trigram-MinHash blocking keys per name
-    (splitmix64 over crc32 trigram codes; the *bits* need not match the
-    distributed path — banding only generates candidates, recall comes
-    from the same 1-(1-J)^8 collision bound), buckets over ``max_bucket``
-    dropped, then candidates verified by EXACT trigram Jaccard >=
-    CANON_THRESHOLD (so the blocking hash never changes the edge set on
-    any pair it surfaces), then union-find with min-(name, id)
-    representatives. Semantics therefore match the distributed branch
-    edge-for-edge wherever both surface the candidate, with the identical
-    verify + component contract."""
-    import zlib
-
-    import numpy as np
-
+    ``rows`` carry the SQL trigram set ``tg`` (:data:`CANON_TG_EXPR`) and
+    band signature ``sig`` (:data:`CANON_SIG_EXPR`), computed by Catalyst in
+    the probe that collected them, so the blocking keys are the very
+    values the distributed branch groups on: the same buckets exist, the
+    same ones exceed CANON_MAX_BUCKET and are dropped, and the candidates
+    are verified by the same exact trigram Jaccard >= CANON_THRESHOLD.
+    Only the bucket grouping, pair enumeration, verify and union-find
+    (min-(name, id) representatives) run in Python — the mapping equals
+    the distributed levels' pair for pair. Trigram sets are held as int
+    bitmasks over a per-call trigram numbering, so a verify is one AND +
+    popcount (|A|+|B|-|A&B| is the union size). Measured on the
+    6.9k-row vocabulary dim (1.4e5 candidate pairs, one core of a 4-core
+    x86-64 host): 0.05 s against 0.34 s for set intersection + union."""
     ids: list[str] = []
-    names: list[str] = []
-    tgs: list[set] = []
+    masks: list[int] = []
+    name_of: dict[str, str] = {}
+    trigram_bit: dict[str, int] = {}
+    buckets: dict[tuple[int, int], list[int]] = {}
     for r in rows:
-        t = K._trigrams(r.canonical_name or "")
-        if t:
-            ids.append(r.entity_id)
-            names.append(r.canonical_name)
-            tgs.append(t)
-    if not ids:
-        return []
-
-    vocab: dict[str, int] = {}
-    flat: list[int] = []
-    offsets = [0]
-    for t in tgs:
-        for g in t:
-            gi = vocab.get(g)
-            if gi is None:
-                gi = vocab[g] = len(vocab)
-            flat.append(gi)
-        offsets.append(len(flat))
-    flat_ids = np.asarray(flat, dtype=np.int64)
-    starts = np.asarray(offsets[:-1], dtype=np.int64)
-    base = np.array([zlib.crc32(g.encode("utf-8")) for g in vocab],
-                    dtype=np.uint64)
+        if not r.tg:  # the distributed branch's size(tg) > 0 filter
+            continue
+        i = len(ids)
+        ids.append(r.entity_id)
+        masks.append(sum({1 << trigram_bit.setdefault(t, len(trigram_bit))
+                          for t in r.tg}))
+        name_of[r.entity_id] = r.canonical_name
+        for band, bval in enumerate(r.sig):
+            buckets.setdefault((band, bval), []).append(i)
 
     cand: set[tuple[int, int]] = set()
-    n = len(ids)
-    for b in range(num_hashes):
-        # splitmix64 finalizer over (crc32(trigram), band); band offset
-        # reduced mod 2^64 in Python first (numpy warns on scalar uint64
-        # wraparound even though wraparound is the intent)
-        h = base + np.uint64((b * 0x9E3779B97F4A7C15) % (1 << 64))
-        h = (h ^ (h >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-        h = (h ^ (h >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-        h = h ^ (h >> np.uint64(31))
-        mins = np.minimum.reduceat(h[flat_ids], starts)
-        order = np.argsort(mins, kind="stable")
-        sm = mins[order]
-        run_starts = np.flatnonzero(np.r_[True, sm[1:] != sm[:-1]])
-        run_ends = np.r_[run_starts[1:], n]
-        for s, e in zip(run_starts, run_ends):
-            if 1 < e - s <= max_bucket:
-                members = order[s:e]
-                for i in range(len(members)):
-                    for j in range(i + 1, len(members)):
-                        a, c = members[i], members[j]
-                        cand.add((a, c) if a < c else (c, a))
+    for members in buckets.values():
+        if 1 < len(members) <= CANON_MAX_BUCKET:
+            # members are ascending row indices: (a, c) is ordered
+            cand.update((a, c) for k, a in enumerate(members)
+                        for c in members[k + 1:])
 
     thr = K.CANON_THRESHOLD
-    name_of = dict(zip(ids, names))
+    sizes = [m.bit_count() for m in masks]
     edges = []
     for a, c in cand:
-        u = len(tgs[a] | tgs[c])
-        if u and len(tgs[a] & tgs[c]) / u >= thr:
+        inter = (masks[a] & masks[c]).bit_count()
+        if inter / (sizes[a] + sizes[c] - inter) >= thr:
             edges.append((ids[a], ids[c]))
     return _union_find_mapping(edges, name_of)
 
@@ -528,15 +495,16 @@ def canonicalize(entities: DataFrame,
     size-switch AQE applies to join strategies, with a two-level cascade:
 
     1. The entities dim (one row per distinct normalized def name — orders
-       smaller than the corpus) is probed with ``limit(dim_max+1)``. When
-       it fits (<= driver_dim_max, default 500k ~= 40 MB of short
-       strings), the ENTIRE blocking + verify + union-find runs
-       driver-side, numpy-vectorized (:func:`_driver_canonical_mapping`),
-       in the one job that also materializes the entities persist for the
-       downstream alias/same_as consumers — no Catalyst banding job at
-       all, and the mapping goes back as a broadcast join (zero shuffles
-       added downstream). This removed the pipeline's largest fixed eager
-       cost (~1.3 s of HOF banding codegen + execution per run at sf0.1).
+       smaller than the corpus) is probed with ``limit(dim_max+1)``; the
+       probe also projects each name's trigram set and band signature
+       (:data:`CANON_TG_EXPR` / :data:`CANON_SIG_EXPR`, the expressions
+       every level and the incremental blocking index share). When the
+       dim fits (<= driver_dim_max, default 500k ~= 40 MB of short
+       strings), bucketing + verify + union-find run driver-side
+       (:func:`_driver_canonical_mapping`) in the one job that also
+       materializes the entities persist for the downstream
+       alias/same_as consumers — no grouping shuffle, and the mapping
+       goes back as a broadcast join (zero shuffles added downstream).
     2. Otherwise the distributed :func:`canonical_candidate_pairs` plan
        builds the verified edges; ``limit(max+1)`` probes THEM, and when
        they fit (<= driver_cc_max_edges, default 200k) union-find still
@@ -547,6 +515,8 @@ def canonicalize(entities: DataFrame,
        runs over only the edge-incident nodes (isolated entities never
        enter the loop).
 
+    All levels block on the same signature values and drop the same
+    over-cap buckets, so they return the same mapping.
     Representative per component = min (canonical_name, entity_id).
     Returns ``entities`` + ``canonical_id`` (canonical_id == entity_id for
     isolated/representative entities)."""
@@ -554,10 +524,13 @@ def canonicalize(entities: DataFrame,
     e = entities.select("entity_id", "canonical_name")
     schema = "entity_id string, canonical_id string"
 
-    dim_head = e.limit(driver_dim_max + 1).collect()
+    dim_head = (e.limit(driver_dim_max + 1)
+                .withColumn("tg", F.expr(CANON_TG_EXPR))
+                .withColumn("sig", F.expr(CANON_SIG_EXPR))
+                .collect())
     if len(dim_head) <= driver_dim_max:
-        # level 1: whole dim fits — driver-vectorized mapping, no
-        # Catalyst banding job; shares the single return tail below
+        # level 1: whole dim fits — driver-side bucketing over the probed
+        # signatures; shares the single return tail below
         mapping = _driver_canonical_mapping(dim_head)
         canon = F.broadcast(spark.createDataFrame(mapping or [], schema))
     else:
@@ -610,15 +583,69 @@ def canonicalize(entities: DataFrame,
 _PRED_FOR_KIND = {"def": "defines", "import": "imports", "call": "calls"}
 
 
+def segment_subject() -> F.Column:
+    """THE subject of every segment-scoped triple: ``repo/path#seg_id``
+    (batch, streaming, incremental relink and the query surface all build
+    it here; seg ids are hex, so the last ``#`` splits it back)."""
+    return F.concat_ws("", F.col("repo"), F.lit("/"), F.col("path"),
+                       F.lit("#"), F.col("seg_id"))
+
+
+def file_node() -> F.Column:
+    """THE file node ``repo/path`` — the object of ``member_of``."""
+    return F.concat_ws("/", "repo", "path")
+
+
+def file_local_triples(front_end: DataFrame) -> DataFrame:
+    """defines/imports/calls from mention rows and member_of from the
+    ``_seg`` marker rows of :func:`fused_mentions_of` output, as one
+    row-local CASE projection: each input row maps to at most one triple,
+    so a streaming plan (no subplan reuse) runs the fused kernel once per
+    micro-batch instead of once per family. Both families are distinct on
+    (subj, pred, obj) by construction — mention_kernel dedups per
+    (segment, kind, text), and each segment has one marker."""
+    is_marker = F.col("mention_kind") == SEG_MARKER
+    pred_map = F.create_map(
+        *[F.lit(x) for kv in _PRED_FOR_KIND.items() for x in kv])
+    return (
+        front_end.filter(is_marker |
+                         F.col("mention_kind").isin(*_PRED_FOR_KIND))
+        .select(segment_subject().alias("subj"),
+                F.when(is_marker, F.lit("member_of"))
+                .otherwise(pred_map[F.col("mention_kind")]).alias("pred"),
+                F.when(is_marker, file_node())
+                .otherwise(F.col("mention_text")).alias("obj"),
+                "repo", "score")  # marker rows carry score 1.0
+    )
+
+
+def mention_edges(links: DataFrame) -> DataFrame:
+    """The mentions family before dedup: one (subj, 'mentions', entity)
+    row per linked representative mention (``link_rep`` — one per
+    (segment, alias_key); link candidates are a function of alias_key, so
+    representatives cover every linked entity at identical scores), with
+    the ``multi_key`` flag that marks the only rows that can repeat a
+    (subj, obj) pair."""
+    return (
+        links.filter(F.col("linked") & F.col("link_rep"))
+        .select(segment_subject().alias("subj"),
+                F.lit("mentions").alias("pred"),
+                F.col("entity_id").alias("obj"), "repo", "score",
+                "multi_key")
+    )
+
+
 def triples_of(
-    segments: DataFrame,
+    markers: DataFrame,
     mentions: DataFrame,
     links: DataFrame,
     entities_canon: DataFrame,
     run_id: str = "run0",
     source_unique_paths: bool = True,
 ) -> DataFrame:
-    """Assemble the four triple families.
+    """Assemble the four triple families from the front-end's marker rows
+    and mention rows (:func:`fused_mentions_of`, split on ``SEG_MARKER``),
+    the links of :func:`link_mentions` and the canonicalized entities.
 
     ``source_unique_paths=True`` (default) declares the ingestion-level
     invariant that source rows are unique per (repo, path) — the scan-side
@@ -632,83 +659,22 @@ def triples_of(
     (subj, pred, obj) hash-agg (max score / min repo per key) — duplicate
     (repo, path) rows duplicate base/mentions/member triples alike, not
     just member_of."""
-    m = mentions.withColumn(
-        "subj", F.concat_ws("", F.col("repo"), F.lit("/"), F.col("path"),
-                            F.lit("#"), F.col("seg_id")))
-
     # The four triple families have disjoint pred sets, so (subj,pred,obj)
     # dedup never crosses branches — dedup per branch and skip it entirely
-    # where uniqueness holds by construction. This removes the former
-    # whole-output groupBy (the largest shuffle in the job: every triple's
-    # long subj string crossed the wire) in favor of one small agg on the
-    # linked subset.
-    pred_map = F.create_map(
-        *[F.lit(x) for kv in _PRED_FOR_KIND.items() for x in kv])
-    # base: mention_kernel dedups per (seg, kind, text) and pred is a
-    # function of kind -> (subj,pred,obj) already distinct. No shuffle.
-    base = (
-        m.filter(F.col("mention_kind").isin(*_PRED_FOR_KIND))
-        .select("subj", pred_map[F.col("mention_kind")].alias("pred"),
-                F.col("mention_text").alias("obj"), "repo", "score")
+    # where uniqueness holds by construction.
+    local = file_local_triples(markers.unionByName(mentions))
+    # mentions: a duplicate (subj, entity) needs two DISTINCT alias_keys
+    # resolving to one entity, i.e. multi_key (flagged on the tiny alias
+    # dim in best_aliases). Only that subset — empty to tiny on real
+    # corpora — pays a hash-agg (max score, matching the oracle's keep-max
+    # global dedup); the bulk stays a pure filter.
+    edges = mention_edges(links)
+    safe = edges.filter(~F.col("multi_key")).drop("multi_key")
+    amb = (
+        edges.filter(F.col("multi_key"))
+        .groupBy("subj", "pred", "obj")
+        .agg(F.max("score").alias("score"), F.min("repo").alias("repo"))
     )
-    # ment: two mentions in one segment (e.g. a call and a ref of the same
-    # name) can emit the same (subj, mentions, entity) triple. The kernel
-    # pre-marks one representative per (segment, alias_key) — link
-    # candidates are a function of alias_key, so representatives cover all
-    # linked entities with identical scores — making the bulk a pure
-    # filter; only links to entities that win >1 alias_key (`multi_key`)
-    # need a keep-max hash-agg for exact uniqueness. Fallback for links
-    # without the flags: hash-agg dedup over the whole linked subset.
-    if "seg_id" in links.columns:  # links carries provenance columns
-        lm = links.filter(F.col("linked")).withColumn(
-            "subj", F.concat_ws("", F.col("repo"), F.lit("/"), F.col("path"),
-                                F.lit("#"), F.col("seg_id")))
-    else:  # externally supplied links (checkpoint of an older layout)
-        lm = (links.filter(F.col("linked"))
-              .join(m.select("mention_id", "subj", "repo"), "mention_id"))
-    if "link_rep" in lm.columns and "multi_key" in lm.columns:
-        # Exact, shuffle-bounded dedup: link_rep makes (subj, entity)
-        # unique per alias_key; a duplicate needs two DISTINCT keys
-        # resolving to one entity, i.e. multi_key (flagged on the tiny
-        # alias dim in link_mentions). Only that subset — empty to tiny
-        # on real corpora — pays a hash-agg (max score, matching the
-        # oracle's keep-max global dedup); the bulk stays a pure filter.
-        rep = lm.filter(F.col("link_rep"))
-        safe = (
-            rep.filter(~F.col("multi_key"))
-            .select("subj", F.lit("mentions").alias("pred"),
-                    F.col("entity_id").alias("obj"), "repo", "score")
-        )
-        amb = (
-            rep.filter(F.col("multi_key"))
-            .groupBy("subj", F.col("entity_id").alias("obj"))
-            .agg(F.max("score").alias("score"), F.min("repo").alias("repo"))
-            .select("subj", F.lit("mentions").alias("pred"), "obj", "repo",
-                    "score")
-        )
-        ment = safe.unionByName(amb)
-    elif "link_rep" in lm.columns:  # older checkpoint layout: filter-only
-        ment = (
-            lm.filter(F.col("link_rep"))
-            .select("subj", F.lit("mentions").alias("pred"),
-                    F.col("entity_id").alias("obj"), "repo", "score")
-        )
-    else:
-        ment = (
-            lm.groupBy("subj", F.col("entity_id").alias("obj"))
-            .agg(F.max("score").alias("score"), F.min("repo").alias("repo"))
-            .select("subj", F.lit("mentions").alias("pred"), "obj", "repo",
-                    "score")
-        )
-    # member: one row per segment; seg_id hashes (line_start, line_end,
-    # text) so subj repeats only if source holds duplicate (repo, path)
-    # rows (e.g. two commits of one file).
-    member = segments.select(
-        F.concat_ws("", F.col("repo"), F.lit("/"), F.col("path"),
-                    F.lit("#"), F.col("seg_id")).alias("subj"),
-        F.lit("member_of").alias("pred"),
-        F.concat_ws("/", "repo", "path").alias("obj"),
-        "repo", F.lit(1.0).alias("score"))
     # same: one row per non-canonical entity — unique by construction.
     same = (
         entities_canon.filter(F.col("entity_id") != F.col("canonical_id"))
@@ -717,7 +683,7 @@ def triples_of(
                 F.col("canonical_id").alias("obj"),
                 F.lit("*").alias("repo"), F.lit(1.0).alias("score"))
     )
-    t = base.unionByName(ment).unionByName(member).unionByName(same)
+    t = local.unionByName(safe).unionByName(amb).unionByName(same)
     if not source_unique_paths:
         # multi-commit inputs duplicate every family: one global hash-agg
         # (map-side partial combine) restores (subj, pred, obj) uniqueness,
@@ -746,89 +712,68 @@ atexit.register(_cleanup_temp_dirs)
 
 def run_pipeline(spark: SparkSession, source: DataFrame,
                  run_id: str = "run0",
-                 persist_intermediates: bool = True,
-                 fused: bool = True,
                  workdir: str | None = None,
                  source_unique_paths: bool = True) -> dict[str, DataFrame]:
     """End-to-end plan (no checkpointing — see plans.lineage for the
-    resumable runner). NOTE: with ``fused=True`` and
-    ``persist_intermediates=True`` (the defaults) the call is *eager* at
-    the front end — the fused mentions relation is written to parquet
-    immediately (process-lifetime temp dir, cleaned at exit or via
-    ``workdir``); everything downstream stays lazy.
-
-    ``fused=True`` runs segmentation + mention detection as one
-    narrow mapInPandas pass whose output (mentions + per-segment marker
-    rows) is the only thing persisted: it feeds all four downstream
-    branches (entities, links, triple base, member edges). The staged path
-    (``fused=False``) materializes segments and mentions separately — the
-    layout the checkpointed at-scale runner (plans.lineage) uses, at the
-    cost of caching the segment-text relation.
+    resumable runner over the same stages). NOTE: the call is *eager* at
+    the front end — the :func:`fused_mentions_of` relation (mentions +
+    per-segment marker rows) is written to parquet immediately
+    (process-lifetime temp dir, cleaned at exit, or under ``workdir``)
+    and feeds all four downstream branches (entities, links, triple
+    families, member edges); everything downstream stays lazy. The
+    returned ``segments`` relation is lazy and re-runs the segmentation
+    kernel only if consumed (the documents rollup of :func:`write_graph`).
 
     ``source_unique_paths`` is forwarded to :func:`triples_of` — pass False
     when source rows are not unique per (repo, path)."""
-    if fused:
-        fusedf = fused_mentions_of(source)
-        if persist_intermediates:
-            # Materialize the fused front-end as PARQUET, not a block
-            # cache. Measured on this host (pinned CPUs, 2 vs 8 cores,
-            # whole pipeline, min of interleaved repeats): the
-            # MemoryStore/BlockManager cache write serializes under the
-            # block-manager lock — the persist step alone cost +2.4 s on
-            # 2 CPUs but +8.5 s on 8 (anti-scaling) — while a parquet
-            # write is per-task parallel and re-reads are vectorized
-            # columnar scans: pipeline efficiency 0.73 (pq) vs 0.64 (MAD)
-            # with the best absolute time as well. This is also the
-            # at-scale layout (plans.lineage materializes stages the same
-            # way; on a cluster the write lands in the lake, and executor
-            # loss re-reads instead of recomputing). Exchange-reuse
-            # materialization would avoid the copy entirely, but Catalyst
-            # never canonicalizes two MapInPandas subtrees as equal
-            # (Python function identity), so a shared repartition is
-            # recomputed per consumer.
-            import tempfile
-            if workdir:
-                d = os.path.join(workdir, "fused")
-            else:
-                d = tempfile.mkdtemp(prefix="cosmos_fused_")
-                _TEMP_DIRS.append(d)  # reclaimed at process exit
-            # Codec: session default (snappy). Measured (interleaved
-            # warm A/B, 8 pinned CPUs, min of 4): lz4 7.99 s vs snappy
-            # 7.85 s whole-pipeline — the scratch write is not
-            # compression-bound, so no scratch-tier codec override.
-            fusedf.write.mode("overwrite").parquet(d)
-            fusedf = spark.read.parquet(d)
-        mentions = fusedf.filter(F.col("mention_kind") != SEG_MARKER)
-        member_src = fusedf.filter(F.col("mention_kind") == SEG_MARKER)
-        segments = segments_of(source)  # lazy; computed only if consumed
+    import tempfile
+
+    from pyspark import StorageLevel
+
+    # Materialize the fused front-end as PARQUET, not a block cache.
+    # Measured on this host (pinned CPUs, 2 vs 8 cores, whole pipeline,
+    # min of interleaved repeats): the MemoryStore/BlockManager cache
+    # write serializes under the block-manager lock — the persist step
+    # alone cost +2.4 s on 2 CPUs but +8.5 s on 8 (anti-scaling) — while
+    # a parquet write is per-task parallel and re-reads are vectorized
+    # columnar scans: pipeline efficiency 0.73 (pq) vs 0.64 (MAD) with
+    # the best absolute time as well. This is also the at-scale layout
+    # (plans.lineage materializes stages the same way; on a cluster the
+    # write lands in the lake, and executor loss re-reads instead of
+    # recomputing). Exchange-reuse materialization would avoid the copy
+    # entirely, but Catalyst never canonicalizes two MapInPandas subtrees
+    # as equal (Python function identity), so a shared repartition is
+    # recomputed per consumer.
+    if workdir:
+        d = os.path.join(workdir, "fused")
     else:
-        segments = segments_of(source)
-        mentions = mentions_of(segments)
-        if persist_intermediates:
-            from pyspark import StorageLevel
-            segments = segments.persist(StorageLevel.MEMORY_AND_DISK)
-            mentions = mentions.persist(StorageLevel.MEMORY_AND_DISK)
-        member_src = segments
-    entities = entities_of(mentions)
-    if persist_intermediates:
-        # the post-agg dim is tiny at any corpus scale (one row per
-        # distinct normalized def name) but feeds 3 consumers (alias
-        # broadcast, canonicalize, same_as) — persisting caps the mentions
-        # relation at one dim-building scan. (Measured alternative, worth
-        # recording: collecting the dim once and rebuilding it as a
-        # LocalRelation for all consumers is ~0.8 s SLOWER at sf0.1 —
-        # the driver->JVM re-serialization of the dim into every
-        # consumer's job costs more than the one MemoryStore write.)
-        from pyspark import StorageLevel
-        entities = entities.persist(StorageLevel.MEMORY_AND_DISK)
+        d = tempfile.mkdtemp(prefix="cosmos_fused_")
+        _TEMP_DIRS.append(d)  # reclaimed at process exit
+    # Codec: session default (snappy). Measured (interleaved warm A/B, 8
+    # pinned CPUs, min of 4): lz4 7.99 s vs snappy 7.85 s whole-pipeline
+    # — the scratch write is not compression-bound, so no scratch-tier
+    # codec override.
+    fused_mentions_of(source).write.mode("overwrite").parquet(d)
+    fused = spark.read.parquet(d)
+    mentions = fused.filter(F.col("mention_kind") != SEG_MARKER)
+    markers = fused.filter(F.col("mention_kind") == SEG_MARKER)
+    # the post-agg dim is tiny at any corpus scale (one row per distinct
+    # normalized def name) but feeds 3 consumers (alias broadcast,
+    # canonicalize, same_as) — persisting caps the mentions relation at
+    # one dim-building scan. (Measured alternative, worth recording:
+    # collecting the dim once and rebuilding it as a LocalRelation for
+    # all consumers is ~0.8 s SLOWER at sf0.1 — the driver->JVM
+    # re-serialization of the dim into every consumer's job costs more
+    # than the one MemoryStore write.)
+    entities = entities_of(mentions).persist(StorageLevel.MEMORY_AND_DISK)
     aliases = aliases_of(entities)
     links = link_mentions(mentions, aliases)
     entities_canon = canonicalize(entities)
-    triples = triples_of(member_src, mentions, links, entities_canon,
+    triples = triples_of(markers, mentions, links, entities_canon,
                          run_id=run_id,
                          source_unique_paths=source_unique_paths)
     return {
-        "segments": segments,
+        "segments": segments_of(source),
         "mentions": mentions,
         "entities": entities_canon,
         "aliases": aliases,
@@ -897,10 +842,10 @@ def write_graph(result: dict[str, DataFrame], catalog,
     beside the object index, `elastic_retriever.py:262-277,360-613`).
     Query-time code (:mod:`cosmos_spark.retrieval`) runs unchanged on the
     re-read tables; the documents table serves doc-level filters without
-    touching the segment relation. NOTE: in the fused pipeline layout the
-    ``segments`` relation is lazy — materializing the rollup is the one
-    consumer that re-runs the segmentation kernel (the fused output
-    deliberately drops segment text)."""
+    touching the segment relation. NOTE: the ``segments`` relation is
+    lazy — materializing the rollup is the one consumer that re-runs the
+    segmentation kernel (the fused output deliberately drops segment
+    text)."""
     catalog.write(result["triples"], f"{prefix}.triples",
                   partition_by=("pred",), sort_within_by=("repo", "subj"))
     nodes = result["entities"].select(

@@ -125,10 +125,6 @@ class _StageTimer:
 # keys and delete-log plumbing
 # ---------------------------------------------------------------------------
 
-def _file_key() -> F.Column:
-    return F.concat_ws("/", "repo", "path")
-
-
 def _bucket_key() -> F.Column:
     return F.concat_ws("|", F.col("band").cast("string"),
                        F.col("bval").cast("string"))
@@ -177,7 +173,7 @@ def _anti_delete(df: DataFrame, deletes: DataFrame | None, kind: str,
 def manifest_view(catalog, prefix: str = "inc") -> DataFrame:
     m = catalog.read_at(f"{prefix}.manifest", snapshot_col="_snap")
     m = _anti_delete(m, _deletes_for(catalog, prefix, "manifest"),
-                     "file", _file_key())
+                     "file", P.file_node())
     return m.drop("_snap")
 
 
@@ -186,7 +182,7 @@ def mentions_view(catalog, prefix: str = "inc",
     m = catalog.read_at(f"{prefix}.mentions", snapshot_col="_snap",
                         prune_buckets=prune_buckets)
     m = _anti_delete(m, _deletes_for(catalog, prefix, "mentions"),
-                     "file", _file_key())
+                     "file", P.file_node())
     return m.drop("_snap")
 
 
@@ -1196,8 +1192,6 @@ def _update_graph_impl(spark: SparkSession, catalog, incoming: DataFrame,
                   P._alias_norm_col(
                       F.substring_index(F.col("mention_text"), ".", -1))
                   == F.col("alias_key"), "left_semi"))
-        subj = F.concat_ws("", F.col("repo"), F.lit("/"), F.col("path"),
-                           F.lit("#"), F.col("seg_id"))
         # alias dict restricted to the recompute keys: men_link rows all
         # carry one of them, candidate sets per key are complete, and
         # ment_re's groupBy dedups unconditionally (multi_key unused) —
@@ -1210,7 +1204,8 @@ def _update_graph_impl(spark: SparkSession, catalog, incoming: DataFrame,
         ment_re = _delta_ckpt(
             P.link_mentions(men_link, al_relink)
             .filter(F.col("linked"))
-            .select(subj.alias("subj"), F.col("entity_id").alias("obj"),
+            .select(P.segment_subject().alias("subj"),
+                    F.col("entity_id").alias("obj"),
                     "repo", "score")
             .groupBy("subj", "obj")
             .agg(F.max("score").alias("score"),
@@ -1298,7 +1293,7 @@ def _update_graph_impl(spark: SparkSession, catalog, incoming: DataFrame,
     def _dels(target: str, as_of: int):
         return touched.select(
             F.lit(target).alias("target"), F.lit("file").alias("kind"),
-            _file_key().alias("key"), F.lit(as_of).alias("as_of"))
+            P.file_node().alias("key"), F.lit(as_of).alias("as_of"))
 
     del_rows = None
     if n_touched:

@@ -8,7 +8,8 @@ skipped wholesale on rerun (`cosmos_service/src/util/make_parquet.py:88-97,
 Here the unit of completion is a *stage*: each stage writes its output
 parquet, then per-partition lineage rows
 ``(stage, partition_id, input_sha256_agg, row_count, wall_ms, run_id)``,
-then an atomic meta marker carrying the stage's input fingerprint.
+then an atomic meta marker carrying the stage's input fingerprint and
+the stage-dir format (:data:`STAGE_FORMAT`).
 Write-then-log ordering mirrors the reference's set-progress-after-success
 (`make_parquet.py:749-765`): a killed run can leave data without a marker
 (recomputed next time — safe), never a marker without data.
@@ -33,6 +34,10 @@ from .. import kernels as K
 from ..kernels import sha256_hex
 
 _META = "_cosmos_meta.json"
+# Layout of a stage dir (marker fields, lineage digest, stage set). A
+# marker without this value belongs to an older layout: it never resumes
+# and lineage() does not report its stage.
+STAGE_FORMAT = 2
 
 LINEAGE_COLUMNS = ["stage", "partition_id", "input_sha256_agg",
                    "row_count", "wall_ms", "run_id"]
@@ -89,17 +94,20 @@ class Checkpointer:
         d = os.path.join(self.workdir, name)
         return d, os.path.join(d, _META)
 
-    def is_complete(self, name: str, fingerprint: str) -> bool:
-        _, meta = self._paths(name)
-        if not os.path.exists(meta):
-            return False
+    def _current_meta(self, name: str) -> dict | None:
+        """The stage's marker if it is in the current format, else None."""
         try:
-            with open(meta) as f:
-                return json.load(f).get("fingerprint") == fingerprint
+            with open(self._paths(name)[1]) as f:
+                meta = json.load(f)
         except (json.JSONDecodeError, OSError):
-            # a truncated/corrupt marker means NOT complete (recompute
-            # overwrites it) — never an unresumable crash loop
-            return False
+            # a missing or truncated/corrupt marker means NOT complete
+            # (recompute overwrites it) — never an unresumable crash loop
+            return None
+        return meta if meta.get("format") == STAGE_FORMAT else None
+
+    def is_complete(self, name: str, fingerprint: str) -> bool:
+        meta = self._current_meta(name)
+        return meta is not None and meta.get("fingerprint") == fingerprint
 
     def stage(self, name: str, fingerprint: str,
               compute: Callable[[], DataFrame]) -> DataFrame:
@@ -142,16 +150,20 @@ class Checkpointer:
         # leave no truncated marker (tmp + os.replace)
         tmp = meta + ".tmp"
         with open(tmp, "w") as f:
-            json.dump({"fingerprint": fingerprint, "run_id": self.run_id,
-                       "stage": name, "wall_ms": wall_ms}, f)
+            json.dump({"format": STAGE_FORMAT, "fingerprint": fingerprint,
+                       "run_id": self.run_id, "stage": name,
+                       "wall_ms": wall_ms}, f)
         os.replace(tmp, meta)
         self.computed.append(name)
         return out
 
     def lineage(self) -> DataFrame:
+        """Lineage rows of every completed stage in the current format —
+        stage dirs left by an older layout (other stage names, other
+        digest) stay on disk but are not reported."""
         dirs = [os.path.join(self.workdir, n, "lineage")
                 for n in sorted(os.listdir(self.workdir))
-                if os.path.isdir(os.path.join(self.workdir, n, "lineage"))]
+                if self._current_meta(n) is not None]
         if not dirs:
             # before any stage completes the glob matches nothing and
             # spark.read would raise PATH_NOT_FOUND — return the empty
@@ -171,7 +183,12 @@ def run_resumable(
     stop_after: str | None = None,
     source_unique_paths: bool = True,
 ) -> dict[str, DataFrame | None]:
-    """The checkpointed end-to-end pipeline.
+    """The checkpointed end-to-end pipeline: :func:`pipeline.run_pipeline`'s
+    stages, each materialized by :meth:`Checkpointer.stage` — ``front_end``
+    (the fused mentions + segment-marker relation), ``entities_aliases``,
+    ``links``, ``entities_canon`` and ``triples``. The result also carries
+    ``mentions`` (the front end's non-marker rows) and a lazy ``segments``
+    relation, the keys :func:`pipeline.write_graph` reads.
 
     ``stop_after`` simulates a killed run in tests (stages up to and
     including it are materialized; the rest aren't). A rerun with the same
@@ -189,8 +206,8 @@ def run_resumable(
         src = src.withColumn("content_sha256", F.sha2(F.col("content"), 256))
     fp0 = ck.fingerprint_source(src)
 
-    order = ["segments", "mentions", "entities_aliases", "links",
-             "entities_canon", "triples"]
+    order = ["front_end", "entities_aliases", "links", "entities_canon",
+             "triples"]
     fps = {}
     prev = fp0
     for name in order:
@@ -206,17 +223,18 @@ def run_resumable(
     # nothing — the reference's sha job cache behaves the same).
     fps["triples"] = sha256_hex(f"{fps['triples']}|uniq={source_unique_paths}")
 
-    out: dict[str, DataFrame | None] = {k: None for k in order}
+    out: dict[str, DataFrame | None] = {
+        k: None for k in ["segments", "mentions", *order]}
 
-    segments = ck.stage("segments", fps["segments"], lambda: P.segments_of(src))
-    out["segments"] = segments
-    if stop_after == "segments":
-        return out
-
-    mentions = ck.stage("mentions", fps["mentions"],
-                        lambda: P.mentions_of(segments))
+    front = ck.stage("front_end", fps["front_end"],
+                     lambda: P.fused_mentions_of(src))
+    mentions = front.filter(F.col("mention_kind") != P.SEG_MARKER)
+    markers = front.filter(F.col("mention_kind") == P.SEG_MARKER)
+    out["front_end"] = front
     out["mentions"] = mentions
-    if stop_after == "mentions":
+    # lazy, as in run_pipeline: re-runs segmentation only if consumed
+    out["segments"] = P.segments_of(src)
+    if stop_after == "front_end":
         return out
 
     entities = ck.stage("entities_aliases", fps["entities_aliases"],
@@ -243,7 +261,7 @@ def run_resumable(
 
     triples = ck.stage(
         "triples", fps["triples"],
-        lambda: P.triples_of(segments, mentions, links,
+        lambda: P.triples_of(markers, mentions, links,
                              canon.select("entity_id", "canonical_id"),
                              run_id=run_id,
                              source_unique_paths=source_unique_paths))

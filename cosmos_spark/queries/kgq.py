@@ -41,10 +41,9 @@ def q_kg_member_triples(spark, sf_dir):
     from .. import pipeline as P
     segs = P.segments_of(_docs_as_source(spark, sf_dir))
     return segs.select(
-        F.concat_ws("", F.col("repo"), F.lit("/"), F.col("path"),
-                    F.lit("#"), F.col("seg_id")).alias("subj"),
+        P.segment_subject().alias("subj"),
         F.lit("member_of").alias("pred"),
-        F.concat_ws("/", "repo", "path").alias("obj"),
+        P.file_node().alias("obj"),
     )
 
 

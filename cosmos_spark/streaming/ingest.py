@@ -139,42 +139,16 @@ def stream_triples(spark: SparkSession, source_dir: str,
     output matches the batch family exactly (parity pytest)."""
     src = _read_source(spark, source_dir, drop_ingested=True)
     fused = P.fused_mentions_of(src)
-    mentions = fused.filter(F.col("mention_kind") != P.SEG_MARKER)
-
-    subj = F.concat_ws("", F.col("repo"), F.lit("/"), F.col("path"),
-                       F.lit("#"), F.col("seg_id"))
-    pred_map = F.create_map(*[
-        F.lit(x) for kv in P._PRED_FOR_KIND.items() for x in kv])
     # defines/imports/calls AND member_of in ONE pass over the kernel
     # output: streaming plans have no subplan reuse, so a union of two
     # filtered branches would re-run the fused mapInPandas kernel (the
     # expensive Python/Arrow work) once per branch per micro-batch —
-    # each fused row maps to exactly one output row, so a row-local
-    # CASE projection expresses both families in a single subtree
-    is_marker = F.col("mention_kind") == P.SEG_MARKER
-    out = (
-        fused.filter(is_marker |
-                     F.col("mention_kind").isin(*P._PRED_FOR_KIND))
-        .select(subj.alias("subj"),
-                F.when(is_marker, F.lit("member_of"))
-                .otherwise(pred_map[F.col("mention_kind")]).alias("pred"),
-                F.when(is_marker, F.concat_ws("/", "repo", "path"))
-                .otherwise(F.col("mention_text")).alias("obj"),
-                "repo",
-                F.when(is_marker, F.lit(1.0))
-                .otherwise(F.col("score")).alias("score"))
-    )
+    # file_local_triples is the batch path's row-local CASE projection
+    out = P.file_local_triples(fused)
     if aliases is not None:
-        links = P.link_mentions(mentions, aliases)
-        ment = (
-            links.filter(F.col("linked") & F.col("link_rep"))
-            .select(F.concat_ws("", F.col("repo"), F.lit("/"),
-                                F.col("path"), F.lit("#"),
-                                F.col("seg_id")).alias("subj"),
-                    F.lit("mentions").alias("pred"),
-                    F.col("entity_id").alias("obj"), "repo", "score")
-        )
-        out = out.unionByName(_keepmax_rowlocal(ment))
+        mentions = fused.filter(F.col("mention_kind") != P.SEG_MARKER)
+        ment = P.mention_edges(P.link_mentions(mentions, aliases))
+        out = out.unionByName(_keepmax_rowlocal(ment.drop("multi_key")))
     return out
 
 

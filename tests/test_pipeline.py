@@ -137,6 +137,56 @@ def test_canonicalize_all_three_branches_agree(spark, source_df):
     entities.unpersist()
 
 
+def test_canonicalize_levels_agree_with_over_cap_buckets(spark, tmp_path):
+    """Buckets over CANON_MAX_BUCKET are dropped, so the levels agree only
+    if they all block on the same band values: on a dim with over-cap
+    buckets (the 400-file vocabulary corpus), the driver fast path, both
+    distributed levels and the incremental build (build_graph, which
+    bands with the same CANON_SIG_EXPR) must produce the same same_as
+    family."""
+    from cosmos_spark import pipeline as P
+    from cosmos_spark.corpus import corpus_to_spark
+    from cosmos_spark.plans import incremental as I
+    from cosmos_spark.sources.catalog import Catalog
+    from perfbench.vocab_corpus import vocab_rows
+
+    src = corpus_to_spark(spark, vocab_rows(5, range(400), 40, 8),
+                          partitions=4).cache()
+    fused = P.fused_mentions_of(src)
+    entities = P.entities_of(
+        fused.filter(F.col("mention_kind") != P.SEG_MARKER)).cache()
+    # fixture guard: some blocking bucket really is over the cap
+    biggest = (entities.withColumn("tg", F.expr(P.CANON_TG_EXPR))
+               .filter(F.size("tg") > 0)
+               .select(F.posexplode(F.expr(P.CANON_SIG_EXPR)))
+               .groupBy("pos", "col").count()
+               .agg(F.max("count")).first()[0])
+    assert biggest > P.CANON_MAX_BUCKET
+
+    def mapping(**kw):
+        c = P.canonicalize(entities, **kw).toPandas()
+        c = c[c["entity_id"] != c["canonical_id"]]
+        return set(zip(c["entity_id"], c["canonical_id"]))
+
+    level1 = mapping()
+    assert level1
+    assert level1 == mapping(driver_dim_max=0)
+    assert level1 == mapping(driver_dim_max=0, driver_cc_max_edges=0)
+
+    def same_as(t):
+        return set(map(tuple, t.filter(F.col("pred") == "same_as")
+                       .select("subj", "obj").toPandas().to_numpy()))
+
+    built = same_as(run_pipeline(spark, src,
+                                 workdir=str(tmp_path / "run"))["triples"])
+    assert built == level1
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    I.build_graph(spark, src, cat)
+    assert same_as(I.triples_view(cat)) == built
+    entities.unpersist()
+    src.unpersist()
+
+
 def test_equation_segments_in_corpus(spark, source_df, corpus_pdf):
     """M2: the corpus's display-math fixtures come out as 'equation'
     segments, count-exact (one per $$ block + one per equation env)."""
@@ -177,16 +227,19 @@ def test_entry_contract(spark):
     assert df.count() >= 0
 
 
-def test_fused_equals_staged(spark, source_df):
-    """The fused fast path (one mapInPandas pass + parquet
-    materialization) must emit exactly the staged path's triples."""
-    fused = run_pipeline(spark, source_df, fused=True)["triples"].toPandas()
-    staged = run_pipeline(spark, source_df, fused=False)["triples"].toPandas()
-    assert len(fused) == len(_triple_keys(fused))
-    assert len(staged) == len(_triple_keys(staged))
-    assert _triple_keys(fused) == _triple_keys(staged)
-    f = fused.set_index(["subj", "pred", "obj"])["score"].sort_index()
-    s = staged.set_index(["subj", "pred", "obj"])["score"].sort_index()
+def test_resume_equals_run(spark, source_df, tmp_path):
+    """The checkpointed runner (plans.lineage.run_resumable) and the
+    in-memory run_pipeline share one front end and one triple assembly:
+    they must emit the same triple keys with the same scores."""
+    from cosmos_spark.plans import run_resumable
+    run = run_pipeline(spark, source_df)["triples"].toPandas()
+    res = run_resumable(spark, source_df,
+                        str(tmp_path / "ckpt"))["triples"].toPandas()
+    assert len(run) == len(_triple_keys(run))
+    assert len(res) == len(_triple_keys(res))
+    assert _triple_keys(run) == _triple_keys(res)
+    f = run.set_index(["subj", "pred", "obj"])["score"].sort_index()
+    s = res.set_index(["subj", "pred", "obj"])["score"].sort_index()
     assert (f - s).abs().max() < 1e-12
 
 

@@ -50,6 +50,19 @@ def test_kg_narrow_chain_no_shuffle(spark):
     assert "Exchange" not in plan, plan
 
 
+def test_stream_triples_single_kernel_pass(spark, tmp_path, corpus_pdf):
+    """stream_triples emits defines/imports/calls AND member_of from ONE
+    fused kernel subtree: a streaming plan has no subplan reuse, so a
+    second MapInPandas would re-run the Python kernel per micro-batch."""
+    from cosmos_spark.streaming import ingest
+    src_dir = str(tmp_path / "src")
+    pdf = corpus_pdf.head(4)[["repo", "path", "commit", "lang", "content"]]
+    spark.createDataFrame(pdf).write.parquet(src_dir)
+    plan = _plan(ingest.stream_triples(spark, src_dir))
+    physical = plan.split("\n\n(")[0]
+    assert physical.count("MapInPandas") == 1, plan
+
+
 def test_link_join_is_broadcast(spark, source_df):
     from cosmos_spark import pipeline as P
     mentions = P.mentions_of(P.segments_of(source_df))

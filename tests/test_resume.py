@@ -17,22 +17,21 @@ def _rows(df, cols):
 def test_resume_after_kill(spark, source_df, oracle_result, tmp_path):
     wd = str(tmp_path / "ckpt")
 
-    # run 1: "killed" after the mentions stage
+    # run 1: "killed" after the front_end stage
     partial = run_resumable(spark, source_df, wd, run_id="run1",
-                            stop_after="mentions")
+                            stop_after="front_end")
     assert partial["mentions"] is not None
     assert partial["triples"] is None
 
-    # run 2: full — segments/mentions must be resumed, not recomputed
+    # run 2: full — front_end must be resumed, not recomputed
     full = run_resumable(spark, source_df, wd, run_id="run2")
     ck: Checkpointer = full["_checkpointer"]
-    assert "segments" in ck.skipped and "mentions" in ck.skipped
-    assert "segments" not in ck.computed and "mentions" not in ck.computed
+    assert "front_end" in ck.skipped
+    assert "front_end" not in ck.computed
 
-    # lineage of resumed stages still carries run1 (zero recomputation)
-    for stage in ("segments", "mentions"):
-        with open(os.path.join(wd, stage, "_cosmos_meta.json")) as f:
-            assert json.load(f)["run_id"] == "run1"
+    # lineage of the resumed stage still carries run1 (zero recomputation)
+    with open(os.path.join(wd, "front_end", "_cosmos_meta.json")) as f:
+        assert json.load(f)["run_id"] == "run1"
 
     # triples from the resumed run match the oracle
     got = _rows(full["triples"], ["subj", "pred", "obj"])
@@ -47,7 +46,7 @@ def test_resume_after_kill(spark, source_df, oracle_result, tmp_path):
     again = run_resumable(spark, source_df, wd, run_id="run3")
     ck3: Checkpointer = again["_checkpointer"]
     assert ck3.computed == []
-    assert set(ck3.skipped) == {"segments", "mentions", "entities_aliases",
+    assert set(ck3.skipped) == {"front_end", "entities_aliases",
                                 "links", "entities_canon", "triples"}
     assert _rows(again["triples"], ["subj", "pred", "obj"]) == got
 
@@ -55,13 +54,13 @@ def test_resume_after_kill(spark, source_df, oracle_result, tmp_path):
 def test_changed_input_recomputes(spark, source_df, tmp_path):
     import pyspark.sql.functions as F
     wd = str(tmp_path / "ckpt2")
-    run_resumable(spark, source_df, wd, run_id="runA", stop_after="segments")
+    run_resumable(spark, source_df, wd, run_id="runA", stop_after="front_end")
     # different input -> different fingerprint -> recompute
     smaller = source_df.filter(F.col("repo") != "org9/edge_repo")
     res = run_resumable(spark, smaller, wd, run_id="runB",
-                        stop_after="segments")
+                        stop_after="front_end")
     # the only way to observe: meta now carries runB
-    with open(os.path.join(wd, "segments", "_cosmos_meta.json")) as f:
+    with open(os.path.join(wd, "front_end", "_cosmos_meta.json")) as f:
         assert json.load(f)["run_id"] == "runB"
 
 
@@ -89,13 +88,39 @@ def test_resumed_aliases_derive_from_entities_only(spark, source_df,
 def test_lineage_rows_shape(spark, source_df, tmp_path):
     wd = str(tmp_path / "ckpt3")
     out = run_resumable(spark, source_df, wd, run_id="runL",
-                        stop_after="segments")
+                        stop_after="front_end")
     ck = Checkpointer(spark, wd, "x")
     lin = ck.lineage().toPandas()
     assert set(lin.columns) == {"stage", "partition_id", "input_sha256_agg",
                                 "row_count", "wall_ms", "run_id"}
-    assert (lin["stage"] == "segments").any()
-    assert lin["row_count"].sum() == out["segments"].count()
+    assert (lin["stage"] == "front_end").any()
+    assert lin["row_count"].sum() == out["front_end"].count()
+
+
+def test_lineage_skips_old_layout_stages(spark, source_df, tmp_path):
+    """A workdir written by an older layout keeps its stage dirs (here a
+    ``segments`` stage whose marker predates the format field): they
+    must neither resume nor show up in lineage() beside current stages."""
+    from cosmos_spark.plans.lineage import _META, LINEAGE_COLUMNS
+    wd = str(tmp_path / "ckpt_old")
+    run_resumable(spark, source_df, wd, run_id="runN",
+                  stop_after="front_end")
+    old = os.path.join(wd, "segments")
+    spark.createDataFrame(
+        [("segments", 0, "00ff", 7, 1, "runOld")],
+        "stage string, partition_id int, input_sha256_agg string, "
+        "row_count long, wall_ms int, run_id string",
+    ).write.parquet(os.path.join(old, "lineage"))
+    with open(os.path.join(old, _META), "w") as f:
+        json.dump({"fingerprint": "fpOld", "run_id": "runOld",
+                   "stage": "segments", "wall_ms": 1}, f)
+
+    ck = Checkpointer(spark, wd, "x")
+    assert not ck.is_complete("segments", "fpOld")
+    lin = ck.lineage().toPandas()
+    assert list(lin.columns) == LINEAGE_COLUMNS
+    assert set(lin["stage"]) == {"front_end"}
+    assert "runOld" not in set(lin["run_id"])
 
 
 def test_submit_entrypoint_in_process(spark, tmp_path, capsys):
@@ -216,7 +241,7 @@ def test_resume_invalidates_on_unique_paths_flag(spark, source_df,
                           source_unique_paths=False)
     ck = again["_checkpointer"]
     assert ck.computed == ["triples"]
-    assert set(ck.skipped) == {"segments", "mentions", "entities_aliases",
+    assert set(ck.skipped) == {"front_end", "entities_aliases",
                                "links", "entities_canon"}
 
 
