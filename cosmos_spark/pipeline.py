@@ -482,6 +482,21 @@ CANON_DRIVER_CC_MAX_EDGES = 200_000
 CANON_DRIVER_DIM_MAX = 500_000
 
 
+def _mapping_relation(spark: SparkSession,
+                      mapping: list[tuple[str, str]]) -> DataFrame:
+    """A driver-collected ``(entity_id, canonical_id)`` mapping as a JVM
+    LocalRelation. It goes over as one Arrow table, which plans as
+    ``LocalTableScan`` even when empty; a row list (and an empty pandas
+    frame, which skips Arrow) plans as ``Scan ExistingRDD`` over a Python
+    RDD that every consuming job re-runs in a Python worker."""
+    import pyarrow as pa
+    ids, canon = zip(*mapping) if mapping else ((), ())
+    return spark.createDataFrame(
+        pa.table({"entity_id": pa.array(ids, pa.string()),
+                  "canonical_id": pa.array(canon, pa.string())}),
+        "entity_id string, canonical_id string")
+
+
 def canonicalize(entities: DataFrame,
                  driver_cc_max_edges: int = CANON_DRIVER_CC_MAX_EDGES,
                  driver_dim_max: int = CANON_DRIVER_DIM_MAX
@@ -519,10 +534,15 @@ def canonicalize(entities: DataFrame,
     over-cap buckets, so they return the same mapping.
     Representative per component = min (canonical_name, entity_id).
     Returns ``entities`` + ``canonical_id`` (canonical_id == entity_id for
-    isolated/representative entities)."""
+    isolated/representative entities).
+
+    The driver levels hand the mapping back as a LocalRelation
+    (:func:`_mapping_relation`): every consumer of the result — the
+    ``same_as`` triples, and each ``retrieval.entity_objects`` lookup —
+    then reads it inside the JVM. A Python-RDD-backed frame would start a
+    Python worker in every one of those jobs."""
     spark = entities.sparkSession
     e = entities.select("entity_id", "canonical_name")
-    schema = "entity_id string, canonical_id string"
 
     dim_head = (e.limit(driver_dim_max + 1)
                 .withColumn("tg", F.expr(CANON_TG_EXPR))
@@ -531,8 +551,8 @@ def canonicalize(entities: DataFrame,
     if len(dim_head) <= driver_dim_max:
         # level 1: whole dim fits — driver-side bucketing over the probed
         # signatures; shares the single return tail below
-        mapping = _driver_canonical_mapping(dim_head)
-        canon = F.broadcast(spark.createDataFrame(mapping or [], schema))
+        canon = F.broadcast(_mapping_relation(
+            spark, _driver_canonical_mapping(dim_head)))
     else:
         from pyspark import StorageLevel
 
@@ -541,9 +561,8 @@ def canonicalize(entities: DataFrame,
         head = pairs.limit(driver_cc_max_edges + 1).collect()
         if len(head) <= driver_cc_max_edges:
             pairs.unpersist()
-            mapping = _driver_union_find(head)
             canon = F.broadcast(
-                spark.createDataFrame(mapping or [], schema))
+                _mapping_relation(spark, _driver_union_find(head)))
         else:
             from .operators.graph import connected_components_star
             edges = pairs

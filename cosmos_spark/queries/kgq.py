@@ -252,7 +252,7 @@ FROM documents
 def q_entity_objects(spark, sf_dir):
     """J6 (`elastic_retriever.py:239-258`): resolve entity 'f1' then its
     child objects through the mentions edges of the materialized graph —
-    the parent/child join index as a co-partitionable equi-join."""
+    the parent/child join index as two broadcast left-semi joins."""
     from .. import retrieval
     res = _linking_pipeline(spark, sf_dir)
     out = retrieval.entity_objects(res["triples"], res["entities"],

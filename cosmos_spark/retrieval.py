@@ -9,8 +9,9 @@ objects through the parent/child join index (`:239-258`), with both sides
 routed to the same shard (`:143-150`).
 
 Here: plain filters + joins + a row_number window over (segments, triples,
-entities) DataFrames. "Same shard routing" becomes co-partitioning both
-sides on entity_id before the join.
+entities) DataFrames. "Same shard routing" becomes broadcast left-semi
+joins: the query-bounded entity-id set is shipped to every partition of
+the triples, so an entity lookup moves no triple across the cluster.
 """
 
 from __future__ import annotations
@@ -144,50 +145,49 @@ def search(segments: DataFrame, query: dict, page: int = 0,
         [F.desc("score"), F.asc("seg_id")], page, per_page)
 
 
-def resolve_entity(entities: DataFrame, name: str) -> DataFrame:
-    """Entity lookup by canonical name or alias (case-normalized), collapsed
-    to the canonical representative (same_as-aware)."""
+def _resolved_ids(entities: DataFrame, name: str) -> DataFrame:
+    """THE name match: entities whose canonical name or any alias equals
+    ``name`` case-folded, as their canonical representative ``eid`` (one
+    row per matching entity, so an id can repeat)."""
     n = name.lower()
     hit = entities.filter(
         (F.col("canonical_name") == n)
         | F.array_contains(F.expr("transform(aliases, a -> lower(a))"),
                            F.lit(n)))
     return hit.select(
-        F.coalesce(F.col("canonical_id"), F.col("entity_id"))
-        .alias("entity_id")).distinct()
+        F.coalesce(F.col("canonical_id"), F.col("entity_id")).alias("eid"))
 
 
-def entity_objects(
-    triples: DataFrame,
-    entities: DataFrame,
-    name: str,
-    n_partitions: int | None = None,
-) -> DataFrame:
+def resolve_entity(entities: DataFrame, name: str) -> DataFrame:
+    """Entity lookup by canonical name or alias (case-normalized), collapsed
+    to the canonical representative (same_as-aware)."""
+    return (_resolved_ids(entities, name)
+            .select(F.col("eid").alias("entity_id")).distinct())
+
+
+def entity_objects(triples: DataFrame, entities: DataFrame,
+                   name: str) -> DataFrame:
     """The entity -> child-objects join (J6): all segments that mention the
     named entity (or anything same_as it).
 
-    Both sides are co-partitioned on the join key before the join — the
-    Spark analog of the reference routing parent and child docs to the same
-    shard (`elastic_retriever.py:143-150`). At small query cardinality
-    Catalyst will broadcast the resolved-entity side anyway."""
-    ent = resolve_entity(entities, name)
-
-    # expand canonical -> all members (same_as edges point member -> canon)
-    same = triples.filter(F.col("pred") == "same_as").select(
-        F.col("obj").alias("entity_id"), F.col("subj").alias("member_id"))
-    members = (
-        ent.join(same, "entity_id", "left")
-        .select(F.explode(F.array("entity_id", "member_id")).alias("eid"))
-        .filter(F.col("eid").isNotNull())
-        .distinct()
-    )
-
+    Two broadcast left-semi joins, the Spark analog of the reference
+    routing parent and child docs to the same shard
+    (`elastic_retriever.py:143-150`): the resolved canonical ids select
+    their ``same_as`` members (edges point member -> canonical), and ids +
+    members select the ``mentions`` triples. The key set is bounded by the
+    query, so it is broadcast and the triples never shuffle; semi-join set
+    semantics make a ``distinct`` on the keys unnecessary. Lazy; returns
+    (object_ref, repo, score)."""
+    ids = _resolved_ids(entities, name)
+    same = triples.filter(F.col("pred") == "same_as")
+    members = (same.join(F.broadcast(ids), F.col("obj") == F.col("eid"),
+                         "left_semi")
+               .select(F.col("subj").alias("eid")))
+    keys = ids.unionByName(members)
     mentions = triples.filter(F.col("pred") == "mentions")
-    if n_partitions:
-        mentions = mentions.repartition(n_partitions, "obj")
-        members = members.repartition(n_partitions, "eid")
     return (
-        mentions.join(members, mentions["obj"] == members["eid"], "left_semi")
+        mentions.join(F.broadcast(keys), F.col("obj") == F.col("eid"),
+                      "left_semi")
         .select(F.col("subj").alias("object_ref"), "repo", "score")
     )
 

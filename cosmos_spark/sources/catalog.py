@@ -162,6 +162,16 @@ def _file_stats_kernel(cols: tuple[str, ...]):
     return fn
 
 
+def _forget_pending(meta: dict, table: str, ids: set[int]) -> None:
+    """Drop ``ids`` from ``table``'s pending-stage list in catalog ``meta``
+    (and the table's key once the list is empty)."""
+    pend = meta.get("pending", {})
+    if table in pend:
+        pend[table] = [p for p in pend[table] if p["id"] not in ids]
+        if not pend[table]:
+            del pend[table]
+
+
 class Catalog:
     def __init__(self, spark: SparkSession, warehouse: str,
                  prefer_iceberg: bool = True):
@@ -396,6 +406,15 @@ class Catalog:
         table property inherited by later stages, so appends,
         compaction, and merges keep their manifests."""
         with self._meta_lock:
+            table_spec = self._vmeta(table).get("cluster_by")
+            table_stats = self._vmeta(table).get("stats_by")
+            # validate BEFORE reserving: a rejected stage leaves no
+            # pending entry and no snapshot dir behind
+            if cluster_by is not None and table_spec is not None \
+                    and list(cluster_by) != list(table_spec):
+                raise ValueError(
+                    f"{table} is clustered by {table_spec}; restating "
+                    f"{list(cluster_by)} would mix layouts")
             # next id clears both the log AND any orphaned dirs a
             # rollback or killed stage left on disk
             disk_ids = [int(n.split("-")[1]) for n in
@@ -414,39 +433,43 @@ class Catalog:
             meta.setdefault("pending", {}).setdefault(table, []).append(
                 {"id": sid, "ts": time.time()})
             self._write_catalog_meta(meta)
-            table_spec = self._vmeta(table).get("cluster_by")
-            table_stats = self._vmeta(table).get("stats_by")
-        if cluster_by is not None and table_spec is not None \
-                and list(cluster_by) != list(table_spec):
-            raise ValueError(
-                f"{table} is clustered by {table_spec}; restating "
-                f"{list(cluster_by)} would mix layouts")
-        spec = cluster_by if cluster_by is not None else table_spec
-        if spec is not None:
-            key, n = spec
-            df = df.withColumn(_BUCKET_COL, _bucket_of(key, int(n)))
-            partition_by = (_BUCKET_COL,) + tuple(partition_by)
-        self._write_dir(df, d, partition_by, sort_within_by,
-                        mode="overwrite")
-        entry = {"id": sid, "op": op, "dir": f"snap-{sid:05d}",
-                 "partition_by": list(partition_by),
-                 "sort_within_by": list(sort_within_by)}
-        if spec is not None:
-            entry["cluster_by"] = [spec[0], int(spec[1])]
-        stats_cols = tuple(stats_by) or tuple(table_stats or ())
-        if stats_cols:
-            self._write_manifest(d, stats_cols)
-            entry["stats_by"] = list(stats_cols)
-        if op == "overwrite":
-            # an overwrite logically CONTAINS every epoch-tagged append it
-            # replaces, so it inherits the streaming exactly-once
-            # watermark (max committed epoch) — otherwise compaction +
-            # expire would erase it and a replayed micro-batch (the
-            # sink-ran/checkpoint-didn't crash window) would append twice
-            ep = max((s.get("epoch", -1)
-                      for s in self._vmeta(table)["snapshots"]), default=-1)
-            if ep >= 0:
-                entry["epoch"] = ep
+        try:
+            spec = cluster_by if cluster_by is not None else table_spec
+            if spec is not None:
+                key, n = spec
+                df = df.withColumn(_BUCKET_COL, _bucket_of(key, int(n)))
+                partition_by = (_BUCKET_COL,) + tuple(partition_by)
+            self._write_dir(df, d, partition_by, sort_within_by,
+                            mode="overwrite")
+            entry = {"id": sid, "op": op, "dir": f"snap-{sid:05d}",
+                     "partition_by": list(partition_by),
+                     "sort_within_by": list(sort_within_by)}
+            if spec is not None:
+                entry["cluster_by"] = [spec[0], int(spec[1])]
+            stats_cols = tuple(stats_by) or tuple(table_stats or ())
+            if stats_cols:
+                self._write_manifest(d, stats_cols)
+                entry["stats_by"] = list(stats_cols)
+            if op == "overwrite":
+                # an overwrite logically CONTAINS every epoch-tagged
+                # append it replaces, so it inherits the streaming
+                # exactly-once watermark (max committed epoch) — otherwise
+                # compaction + expire would erase it and a replayed
+                # micro-batch (the sink-ran/checkpoint-didn't crash
+                # window) would append twice
+                ep = max((s.get("epoch", -1)
+                          for s in self._vmeta(table)["snapshots"]),
+                         default=-1)
+                if ep >= 0:
+                    entry["epoch"] = ep
+        except BaseException:
+            # a failed write is not awaiting commit: drop the reservation
+            # (the dir, if any, is an orphan for expire_snapshots)
+            with self._meta_lock:
+                meta = self._read_catalog_meta()
+                _forget_pending(meta, table, {sid})
+                self._write_catalog_meta(meta)
+            raise
         return {"table": table, "entry": entry}
 
     def read_staged(self, staged: dict) -> DataFrame:
@@ -692,14 +715,8 @@ class Catalog:
                 entry["snapshots"].append(s["entry"])
             # committed ids are no longer pending (in-flight-stage
             # protection, see expire_snapshots)
-            pend = meta.get("pending", {})
             for s in staged:
-                if s["table"] in pend:
-                    pend[s["table"]] = [
-                        p for p in pend[s["table"]]
-                        if p["id"] != s["entry"]["id"]]
-                    if not pend[s["table"]]:
-                        del pend[s["table"]]
+                _forget_pending(meta, s["table"], {s["entry"]["id"]})
             self._write_catalog_meta(meta)
         return {s["table"]: s["entry"]["id"] for s in staged}
 
@@ -984,13 +1001,8 @@ class Catalog:
             if entry is not None:
                 entry["snapshots"] = [s for s in entry["snapshots"]
                                       if s["id"] not in expired]
-            pend = meta.get("pending", {})
-            if table in pend:
-                # reclaimed stale-pending dirs leave the pending list too
-                pend[table] = [p for p in pend[table]
-                               if p["id"] not in expired]
-                if not pend[table]:
-                    del pend[table]
+            # reclaimed stale-pending dirs leave the pending list too
+            _forget_pending(meta, table, set(expired))
             self._write_catalog_meta(meta)
         return expired
 

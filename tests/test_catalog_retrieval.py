@@ -173,9 +173,25 @@ def test_search_segments_doc_filter(spark, graph):
     assert 0 < len(got) < len(base)
 
 
+def _entity_objects_ref(triples, ents, name):
+    """pandas reference for ``entity_objects``: (object_ref, repo, score)
+    rows of the mentions triples whose entity is the name's canonical
+    representative or a same_as member of it."""
+    n = name.lower()
+    hit = ents[(ents["canonical_name"] == n)
+               | ents["aliases"].map(lambda a: n in {x.lower() for x in a})]
+    ids = set(hit["canonical_id"].fillna(hit["entity_id"]))
+    same = triples[triples["pred"] == "same_as"]
+    ids |= set(same[same["obj"].isin(ids)]["subj"])
+    men = triples[(triples["pred"] == "mentions") & triples["obj"].isin(ids)]
+    return sorted(zip(men["subj"], men["repo"], men["score"]))
+
+
 def test_entity_objects_same_as_aware(graph):
     """Querying by the canonical name must surface mentions linked to any
-    same_as member entity."""
+    same_as member entity; alias hits are case-folded, a miss is empty,
+    and a multi-member component returns every member's mentions — each
+    row-exact against a pandas reference over the same frames."""
     ents = graph["entities"].toPandas()
     # pick a canonical entity that has same_as members
     merged = ents[ents["entity_id"] != ents["canonical_id"]]
@@ -191,6 +207,30 @@ def test_entity_objects_same_as_aware(graph):
     tp = graph["triples"].filter(F.col("pred") == "mentions").toPandas()
     expected = set(tp[tp["obj"].isin(member_ids)]["subj"])
     assert set(objs["object_ref"]) == expected
+
+    # an alias that is not the canonical name, queried in another case
+    alias_rows = [(a, c) for als, c in zip(ents["aliases"],
+                                           ents["canonical_name"])
+                  for a in als if a.lower() != c and a != a.lower()]
+    assert alias_rows, "fixture lost its mixed-case aliases"
+    alias = alias_rows[0][0].swapcase()
+    allt = graph["triples"].toPandas()
+    # a same_as component with >= 2 members besides the canonical (the
+    # one with the most mentions)
+    sizes = merged.groupby("canonical_id").size()
+    big_names = [ents[ents["entity_id"] == c].iloc[0]["canonical_name"]
+                 for c in sizes[sizes >= 2].index]
+    assert big_names
+    big_name = max(big_names,
+                   key=lambda n: len(_entity_objects_ref(allt, ents, n)))
+    for name, nonempty in ((canon_name, True), (alias, True),
+                           ("no_such_entity_xyz", False),
+                           (big_name.upper(), True)):
+        got = retrieval.entity_objects(graph["triples"], graph["entities"],
+                                       name).toPandas()
+        rows = sorted(zip(got["object_ref"], got["repo"], got["score"]))
+        assert rows == _entity_objects_ref(allt, ents, name), name
+        assert bool(rows) == nonempty, name
 
 
 def test_commit_group_atomic_and_optimistic(spark, tmp_path_factory):
@@ -796,6 +836,31 @@ def test_expire_spares_pending_stage_until_stale(spark, tmp_path_factory):
     sid2 = staged2["entry"]["id"] if "entry" in staged2 else staged2["id"]
     assert cat.expire_snapshots("g.t", keep_last=2,
                                 orphan_grace_sec=0.0) == [sid2]
+
+
+def test_stage_rejection_leaves_no_pending_entry(spark, tmp_path_factory):
+    """A stage rejected for restating a different cluster_by must not
+    leave its id registered as pending (or its dir behind); a stage whose
+    write fails drops its pending id too."""
+    import os
+
+    from pyspark.errors import AnalysisException
+
+    from cosmos_spark.sources.catalog import Catalog
+    cat = Catalog(spark, warehouse=str(tmp_path_factory.mktemp("wh_rej")))
+    df = spark.createDataFrame([("k1", 1)], "k: string, v: long")
+    cat.commit_group([cat.stage(df, "g.t", "append", cluster_by=("k", 8))])
+    dirs = sorted(os.listdir(cat._vdir("g.t")))
+    with pytest.raises(ValueError, match="would mix layouts"):
+        cat.stage(df, "g.t", "append", cluster_by=("k", 16))
+    assert "g.t" not in cat._read_catalog_meta().get("pending", {})
+    assert sorted(os.listdir(cat._vdir("g.t"))) == dirs
+    with pytest.raises(AnalysisException):
+        cat.stage(df, "g.t", "append", partition_by=("no_such_col",))
+    assert "g.t" not in cat._read_catalog_meta().get("pending", {})
+    # the table still stages and commits normally afterwards
+    cat.commit_group([cat.stage(df, "g.t", "append")])
+    assert cat.read_at("g.t").count() == 2
 
 
 def test_commit_group_rejects_conflicting_cluster_spec(spark,

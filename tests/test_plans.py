@@ -144,16 +144,82 @@ def test_export_rank_no_full_table_single_partition(spark):
 
 
 def test_canonicalize_fast_path_mapping_is_broadcast(spark, source_df):
-    """The driver-side canonicalization fast path must attach its mapping
-    as a broadcast join — zero shuffles added downstream of the dim."""
+    """The driver-side canonicalization levels must attach their mapping
+    as a broadcast join of a JVM LocalRelation — zero shuffles added
+    downstream of the dim, and no Python RDD scan (``ExistingRDD``) for
+    every consumer to re-run. A dim with no same_as edge yields an empty
+    mapping, which must be a LocalRelation of the same schema."""
+    import pandas as pd
+
     from cosmos_spark import pipeline as P
     mentions = P.mentions_of(P.segments_of(source_df))
     entities = P.entities_of(mentions).cache()
-    out = P.canonicalize(entities)
-    plan = _plan(out)
-    assert "BroadcastHashJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
+    lonely = spark.createDataFrame(pd.DataFrame({
+        "entity_id": ["ent_a", "ent_b", "ent_c"],
+        "canonical_name": ["alpha_beta", "gamma_delta", "zq"]}))
+    for dim_max in (P.CANON_DRIVER_DIM_MAX, 0):  # level 1, level 2
+        out = P.canonicalize(entities, driver_dim_max=dim_max)
+        plan = _plan(out)
+        assert "BroadcastHashJoin" in plan, plan
+        assert "SortMergeJoin" not in plan, plan
+        assert "ExistingRDD" not in plan, plan
+
+        out = P.canonicalize(lonely, driver_dim_max=dim_max)
+        assert "ExistingRDD" not in _plan(out)
+        analyzed = out._jdf.queryExecution().analyzed().toString()
+        assert "LocalRelation <empty>, [entity_id#" in analyzed, analyzed
+        assert dict(out.dtypes)["canonical_id"] == "string"
+        assert all(r.canonical_id == r.entity_id for r in out.collect())
     entities.unpersist()
+
+
+def _physical_nodes(df):
+    """The physical plan's operators, with cached relations as leaves
+    (an ``InMemoryTableScan`` does not expose its cached plan as a
+    child): (nodeName, one-line description) pairs."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    stack, out = [plan], []
+    while stack:
+        node = stack.pop()
+        out.append((node.nodeName(), node.simpleString(100)))
+        ch = node.children()
+        stack.extend(ch.apply(i) for i in range(ch.size()))
+    return out
+
+
+def test_entity_objects_is_broadcast_only(spark, source_df, tmp_path):
+    """An entity lookup adds no shuffle and no Python worker: over fresh
+    ``run_pipeline`` output (graph held in memory, canonicalized dim as
+    built) and over the catalog round-trip tables, its plan has no
+    hash-partitioning Exchange, no SortMergeJoin and no ExistingRDD —
+    only broadcast left-semi joins."""
+    from cosmos_spark import retrieval
+    from cosmos_spark.pipeline import run_pipeline, write_graph
+    from cosmos_spark.sources import Catalog
+    res = run_pipeline(spark, source_df)
+    triples = res["triples"].cache()
+    ents = res["entities"].toPandas()
+    name = ents[ents["entity_id"] != ents["canonical_id"]].iloc[0][
+        "canonical_name"]
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    write_graph({**res, "triples": triples}, cat)
+    try:
+        for t, e in ((triples, res["entities"]),
+                     (cat.read("graph.triples"), cat.read("graph.nodes"))):
+            q = retrieval.entity_objects(t, e, name)
+            nodes = _physical_nodes(q)
+            text = "\n".join(d for _, d in nodes)
+            assert "hashpartitioning" not in text, text
+            assert "SortMergeJoin" not in text, text
+            assert "ExistingRDD" not in text, text
+            joins = [(n, d) for n, d in nodes if "Join" in n]
+            assert all(n == "BroadcastHashJoin" for n, _ in joins), text
+            assert sum("LeftSemi" in d for _, d in joins) == 2, text
+            assert q.count() > 0
+    finally:
+        triples.unpersist()
 
 
 def test_partial_aggregation_single_shuffle(spark):
