@@ -485,8 +485,11 @@ def _trigrams(s: str) -> set:
 
 
 def trigram_jaccard(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Batched char-trigram Jaccard — the link-scoring kernel (the analog of
-    the candidate score in `link.py:26-33`). Batch-level loop, no Spark rows."""
+    """Batched char-trigram Jaccard — the link score (the analog of the
+    candidate score in `link.py:26-33`). Batch-level loop, no Spark rows.
+    The oracle and the SQL ``kg_trigram_jaccard`` call it; the Spark link
+    layer computes the same score, bit for bit, in the JVM
+    (``pipeline.best_aliases``)."""
     av = a.fillna("").to_numpy(dtype=object)
     bv = b.fillna("").to_numpy(dtype=object)
     out = np.empty(len(av), dtype="float64")

@@ -98,11 +98,24 @@ def asof_join(left: DataFrame, right: DataFrame, on: list[str],
     unit) nulls matches older than ``left.ts - tolerance``.
     ``right_tiebreak`` must name a right payload column; the greatest
     value wins among equal-ts right rows. ``bucket_width`` switches to
-    the skew-parallel bucketed plan (identical results)."""
+    the skew-parallel bucketed plan (identical results). A ``ts_col``
+    listed in ``payload_cols``, or an input column named like an output
+    column, raises ``ValueError``: either would duplicate an output
+    name."""
     if right_tiebreak is not None and right_tiebreak not in payload_cols:
         raise ValueError("right_tiebreak must be one of payload_cols")
     if len(set(payload_cols)) != len(payload_cols):
         raise ValueError("payload_cols must be distinct")
+    if ts_col in payload_cols:
+        raise ValueError(
+            f"asof_join: ts_col {ts_col!r} is always returned as "
+            f"asof_{ts_col}; it cannot also be a payload column")
+    outputs = {f"asof_{c}" for c in (ts_col, *payload_cols)}
+    taken = sorted(outputs & {*left.columns, *right.columns})
+    if taken:
+        raise ValueError(
+            f"asof_join: column names {taken} collide with the "
+            "operator's output columns")
     clash = [c for c in {*left.columns, *right.columns}
              if c in _RESERVED or c.startswith("_p_")]
     if clash:

@@ -5,7 +5,7 @@ source (repo, path, commit, lang, content)            [Iceberg/parquet scan]
                 mention_kernel): mentions + one
                 marker row per segment
   -> entities + alias dict   groupBy(norm)            [one small shuffle]
-  -> links      broadcast join + batched scoring UDF  [map-side join]
+  -> links      broadcast join + JVM trigram scoring  [map-side join]
   -> canonical  blocked similarity CC                 [one block shuffle]
   -> triples    unions -> hash-agg dedup -> partitioned sink
 
@@ -78,11 +78,6 @@ TRIPLE_SCHEMA = T.StructType([
     T.StructField("score", T.DoubleType()),
     T.StructField("provenance", T.StringType()),
 ])
-
-
-@F.pandas_udf(T.DoubleType())
-def _trigram_jaccard_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return K.trigram_jaccard(a, b)
 
 
 def _alias_norm_col(col):
@@ -265,15 +260,23 @@ def best_aliases(aliases: DataFrame) -> DataFrame:
     """Per-alias_key top-1 scored candidate — the broadcast-sized link
     dim (alias_key, entity_id, link_score, multi_key). Scoring (trigram
     Jaccard vs the canonical name; exact aliases = 1.0 by construction)
-    runs on alias rows, never candidate rows. ``multi_key`` flags
-    entities that win MORE THAN ONE alias_key: only links to those can
-    duplicate a mentions triple, so only that subset ever needs a dedup
-    agg downstream (:func:`triples_of`). Both windows shuffle the dim
-    only, never a mentions relation."""
-    scored = aliases.withColumn(
-        "link_score",
-        F.when(F.col("alias_kind") == "exact", F.lit(1.0)).otherwise(
-            _trigram_jaccard_udf(F.col("alias_key"), F.col("canonical_name"))))
+    runs on alias rows, never candidate rows, and inside the JVM: the
+    trigram sets and the Jaccard are the canonicalization expressions
+    (:func:`trigram_set_expr`, :data:`CANON_JACCARD_EXPR`), bit-identical
+    to ``kernels.trigram_jaccard``, so no Python worker starts. Only
+    fuzzy rows build trigram sets. ``multi_key`` flags entities that win
+    MORE THAN ONE alias_key: only links to those can duplicate a mentions
+    triple, so only that subset ever needs a dedup agg downstream
+    (:func:`triples_of`). Both windows shuffle the dim only, never a
+    mentions relation."""
+    exact = F.col("alias_kind") == "exact"
+    scored = (
+        aliases
+        .withColumn("tg_a", F.when(~exact, F.expr(trigram_set_expr("alias_key"))))
+        .withColumn("tg_b", F.when(~exact, F.expr(CANON_TG_EXPR)))
+        .withColumn("link_score", F.when(exact, F.lit(1.0))
+                    .otherwise(F.expr(CANON_JACCARD_EXPR)))
+        .drop("tg_a", "tg_b"))
     w = Window.partitionBy("alias_key").orderBy(
         F.desc("link_score"), F.asc("entity_id"))
     best = (
@@ -295,7 +298,8 @@ def link_mentions(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
     one broadcast equi-join (J4) and never shuffles: no per-mention
     aggregation, no sort. Scoring (trigram Jaccard vs the canonical name,
     exact aliases = 1.0 by construction) runs on alias rows, not candidate
-    rows — O(|aliases|) UDF work instead of O(|mentions|)."""
+    rows — O(|aliases|) work instead of O(|mentions|) — and in the JVM
+    (:func:`best_aliases`): linking starts no Python worker."""
     best = best_aliases(aliases)
     base = (
         mentions.filter(F.col("mention_kind").isin("call", "import", "ref"))
@@ -313,14 +317,22 @@ def link_mentions(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
 CANON_NUM_HASHES = 8    # single-row bands: recall 1-(1-J)^8 at J>=0.7
 CANON_MAX_BUCKET = 64   # hot-bucket cap (same spirit as dedup.minhash_lsh_pairs)
 
-# THE banding expressions — shared verbatim with plans/incremental.py's
-# persisted blocking index (_banded_rows/_bucket_edges): incremental
-# surgery's bit-for-bit equivalence to a full recanonicalization requires
-# both sides to band and sign IDENTICALLY, so there is exactly one
-# definition of each
-CANON_TG_EXPR = ("array_distinct(filter(transform("
-                 "sequence(1, greatest(length(canonical_name) - 2, 1)), "
-                 "i -> substring(canonical_name, i, 3)), t -> t != ''))")
+# THE trigram-set expression: canonicalization bands and verifies on it
+# and linking scores aliases with it (best_aliases). Shared verbatim with
+# plans/incremental.py's persisted blocking index
+# (_banded_rows/_bucket_edges): incremental surgery's bit-for-bit
+# equivalence to a full recanonicalization requires both sides to band
+# and sign IDENTICALLY, so there is exactly one definition of each. The
+# set equals kernels._trigrams (a name shorter than 3 characters is its
+# own single trigram, the empty name has none).
+def trigram_set_expr(col: str) -> str:
+    """SQL distinct character-trigram set of the string column ``col``."""
+    return ("array_distinct(filter(transform("
+            f"sequence(1, greatest(length({col}) - 2, 1)), "
+            f"i -> substring({col}, i, 3)), t -> t != ''))")
+
+
+CANON_TG_EXPR = trigram_set_expr("canonical_name")
 CANON_SIG_EXPR = (f"transform(sequence(0, {CANON_NUM_HASHES - 1}), "
                   f"h -> array_min(transform(tg, t -> xxhash64(t, h))))")
 
@@ -328,9 +340,13 @@ CANON_SIG_EXPR = (f"transform(sequence(0, {CANON_NUM_HASHES - 1}), "
 # contract: the upper-triangle enumeration over a bucket's sorted rows
 # and the exact trigram-Jaccard verify must also be IDENTICAL on both
 # sides, or a tweak to either silently breaks incremental-vs-rebuild
-# equality (pinned by test_incremental_canon_mode_matches_full).
-CANON_JACCARD_EXPR = ("size(array_intersect(tg_a, tg_b)) / "
-                      "cast(size(array_union(tg_a, tg_b)) as double)")
+# equality (pinned by test_incremental_canon_mode_matches_full). The
+# Jaccard is also the link score: the same double division as
+# kernels.trigram_jaccard, and the kernel's 1.0 when both sets are empty
+# (try_divide's NULL; ANSI 0/0 would raise). Canonicalization drops
+# empty sets first, so the guard never fires there.
+CANON_JACCARD_EXPR = ("coalesce(try_divide(size(array_intersect(tg_a, tg_b)), "
+                      "cast(size(array_union(tg_a, tg_b)) as double)), 1.0D)")
 
 
 def canon_pair_expr(field_map: str) -> str:
@@ -480,21 +496,22 @@ def _driver_canonical_mapping(rows) -> list[tuple[str, str]]:
 
 CANON_DRIVER_CC_MAX_EDGES = 200_000
 CANON_DRIVER_DIM_MAX = 500_000
+_MAPPING_COLUMNS = ("entity_id", "canonical_id")
 
 
-def _mapping_relation(spark: SparkSession,
-                      mapping: list[tuple[str, str]]) -> DataFrame:
-    """A driver-collected ``(entity_id, canonical_id)`` mapping as a JVM
-    LocalRelation. It goes over as one Arrow table, which plans as
-    ``LocalTableScan`` even when empty; a row list (and an empty pandas
-    frame, which skips Arrow) plans as ``Scan ExistingRDD`` over a Python
-    RDD that every consuming job re-runs in a Python worker."""
+def _string_relation(spark: SparkSession, rows: list[tuple],
+                     names: tuple[str, ...]) -> DataFrame:
+    """Driver-side rows of string columns ``names`` (a canonical
+    mapping, a list of deleted files) as a JVM LocalRelation. They go
+    over as one Arrow table, which plans as ``LocalTableScan`` even when
+    empty; a row list (and an empty pandas frame, which skips Arrow)
+    plans as ``Scan ExistingRDD`` over a Python RDD that every consuming
+    job re-runs in a Python worker."""
     import pyarrow as pa
-    ids, canon = zip(*mapping) if mapping else ((), ())
+    cols = list(zip(*rows)) if rows else [()] * len(names)
     return spark.createDataFrame(
-        pa.table({"entity_id": pa.array(ids, pa.string()),
-                  "canonical_id": pa.array(canon, pa.string())}),
-        "entity_id string, canonical_id string")
+        pa.table({n: pa.array(c, pa.string()) for n, c in zip(names, cols)}),
+        ", ".join(f"{n} string" for n in names))
 
 
 def canonicalize(entities: DataFrame,
@@ -537,7 +554,7 @@ def canonicalize(entities: DataFrame,
     isolated/representative entities).
 
     The driver levels hand the mapping back as a LocalRelation
-    (:func:`_mapping_relation`): every consumer of the result — the
+    (:func:`_string_relation`): every consumer of the result — the
     ``same_as`` triples, and each ``retrieval.entity_objects`` lookup —
     then reads it inside the JVM. A Python-RDD-backed frame would start a
     Python worker in every one of those jobs."""
@@ -551,8 +568,8 @@ def canonicalize(entities: DataFrame,
     if len(dim_head) <= driver_dim_max:
         # level 1: whole dim fits — driver-side bucketing over the probed
         # signatures; shares the single return tail below
-        canon = F.broadcast(_mapping_relation(
-            spark, _driver_canonical_mapping(dim_head)))
+        canon = F.broadcast(_string_relation(
+            spark, _driver_canonical_mapping(dim_head), _MAPPING_COLUMNS))
     else:
         from pyspark import StorageLevel
 
@@ -561,8 +578,8 @@ def canonicalize(entities: DataFrame,
         head = pairs.limit(driver_cc_max_edges + 1).collect()
         if len(head) <= driver_cc_max_edges:
             pairs.unpersist()
-            canon = F.broadcast(
-                _mapping_relation(spark, _driver_union_find(head)))
+            canon = F.broadcast(_string_relation(
+                spark, _driver_union_find(head), _MAPPING_COLUMNS))
         else:
             from .operators.graph import connected_components_star
             edges = pairs

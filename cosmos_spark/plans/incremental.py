@@ -293,10 +293,14 @@ def _best_for_keys(aliases: DataFrame, keys: DataFrame) -> DataFrame:
     partitions by alias_key and a key's full candidate set is the alias
     rows carrying that key, so semi-joining the alias dict down to the
     keyed rows first yields bit-identical winners/scores while the
-    shuffle+window runs over a delta-sized slice. The ``multi_key``
-    flag on the result counts wins WITHIN ``keys`` only — callers that
-    consume it must pass a winner-closed key set (:func:`_keys_closure`);
-    callers that only read entity_id/link_score need no closure."""
+    shuffle+window runs over a delta-sized slice: a row's score is the
+    same JVM expression of its own (alias_key, canonical_name), and the
+    window order (link_score desc, entity_id asc) is total within a key
+    because (alias_key, entity_id) is unique (:func:`pipeline.aliases_of`).
+    The ``multi_key`` flag on the result counts wins WITHIN ``keys`` only
+    — callers that consume it must pass a winner-closed key set
+    (:func:`_keys_closure`); callers that only read entity_id/link_score
+    need no closure."""
     return P.best_aliases(
         aliases.join(F.broadcast(keys), "alias_key", "left_semi"))
 
@@ -944,7 +948,7 @@ def _update_graph_impl(spark: SparkSession, catalog, incoming: DataFrame,
     elif isinstance(deleted, DataFrame):
         deleted_df = deleted.select("repo", "path")
     else:
-        deleted_df = spark.createDataFrame(deleted, "repo string, path string")
+        deleted_df = P._string_relation(spark, deleted, ("repo", "path"))
 
     # capture the OCC read-set FIRST, before pinning any view: a writer
     # committing between this capture and a view pin makes the pinned

@@ -1884,6 +1884,21 @@ def test_asof_reserved_column_guard(spark):
                                   "k: long, ts: long, payload: double")
     with _pytest.raises(ValueError, match="_b"):
         asof_join(left, right, ["k"], "ts", ["payload"], bucket_width=10)
+    # an input column named like an output column would be duplicated
+    lclash = spark.createDataFrame([(1, 1, 2.0)],
+                                   "k: long, ts: long, asof_payload: double")
+    with _pytest.raises(ValueError, match="asof_payload"):
+        asof_join(lclash, right, ["k"], "ts", ["payload"])
+    rclash = spark.createDataFrame([(1, 1, 1.0, 2)],
+                                   "k: long, ts: long, payload: double, "
+                                   "asof_ts: long")
+    plain_left = spark.createDataFrame([(1, 2)], "k: long, ts: long")
+    with _pytest.raises(ValueError, match="asof_ts"):
+        asof_join(plain_left, rclash, ["k"], "ts", ["payload"])
+    # ts_col is always returned as asof_<ts_col>; as a payload it would
+    # be returned twice
+    with _pytest.raises(ValueError, match="ts_col"):
+        asof_join(plain_left, right, ["k"], "ts", ["payload", "ts"])
 
 
 def test_hll_merge_associativity(spark):

@@ -7,7 +7,7 @@ arbitrary unicode inputs, not just the planted fixtures.
 """
 
 import pandas as pd
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from cosmos_spark import kernels as K
@@ -156,6 +156,36 @@ def test_trigram_jaccard_properties(a, b):
     assert ab == ba            # symmetric
     assert 0.0 <= ab <= 1.0    # bounded
     assert aa == 1.0           # reflexive
+
+
+# the JVM link score (pipeline.best_aliases) must equal the kernel
+# score bit for bit: names are drawn from all of unicode but surrogates
+# (not encodable as UTF-8, so no Spark string can hold one)
+_name = st.text(alphabet=st.characters(blacklist_categories=("Cs",)),
+                max_size=12)
+
+
+@settings(max_examples=15, deadline=None)
+@given(st.lists(st.tuples(_name, _name), min_size=1, max_size=20,
+                unique_by=lambda p: p[0]))
+@example([("", "abc"), ("x", "")])
+@example([("", ""), ("x", ""), ("a", "a"), ("ab", "abc"), ("ba", "ab"),
+          ("aaaa", "aaaaaaa"), ("abab", "ababab"), ("café", "cafe"), ("naïve_v2", "naïve"), ("東京都庁", "東京都"),
+          ("🙂🙂🙂", "🙂🙂"), ("e\u0301t\u00e9", "ét\u00e9"),
+          ("load_config", "load_config_v2")])
+def test_jvm_link_score_equals_kernel(spark, pairs):
+    from cosmos_spark import pipeline as P
+    aliases = spark.createDataFrame(
+        [(a, f"e{i}", b, "fuzzy") for i, (a, b) in enumerate(pairs)],
+        "alias_key string, entity_id string, canonical_name string, "
+        "alias_kind string")
+    got = {r.alias_key: r.link_score
+           for r in P.best_aliases(aliases).collect()}
+    want = K.trigram_jaccard(pd.Series([a for a, _ in pairs]),
+                             pd.Series([b for _, b in pairs]))
+    assert len(got) == len(pairs)
+    for (a, _), w in zip(pairs, want):
+        assert got[a] == w, (a, got[a], w)
 
 
 # ---------------------------------------------------------------------------
