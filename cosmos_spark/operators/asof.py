@@ -40,7 +40,9 @@ key. The scalable shapes used here:
   max collapses map-side so only spine-sized rows cross its shuffles,
   and the spine comes back to the event relation as a BROADCAST join —
   the full-width event stream is shuffled exactly once. Exactly-equal
-  results pinned by a property test (`tests/test_operators.py`).
+  results under a unique ``(key, ts, right_tiebreak)`` among right rows
+  are pinned by a property test (`tests/test_operators.py`); with ties
+  left, the two plans may pick different tied rows.
 
 SQL semantics are honored at the edges: NULL join keys never match
 (``ON l.k = r.k`` is never true for NULLs — null-keyed left rows come
@@ -98,7 +100,10 @@ def asof_join(left: DataFrame, right: DataFrame, on: list[str],
     unit) nulls matches older than ``left.ts - tolerance``.
     ``right_tiebreak`` must name a right payload column; the greatest
     value wins among equal-ts right rows. ``bucket_width`` switches to
-    the skew-parallel bucketed plan (identical results). A ``ts_col``
+    the skew-parallel bucketed plan. The plain and bucketed plans return
+    exactly equal results only when ``(on, ts_col, right_tiebreak)`` is
+    unique among right rows; otherwise each picks one of the tied rows,
+    and not necessarily the same one. A ``ts_col``
     listed in ``payload_cols``, or an input column named like an output
     column, raises ``ValueError``: either would duplicate an output
     name."""

@@ -65,8 +65,12 @@ has obj in O, and recomputing all mentions whose key is in K_A | K_W
 cross-alias-key duplicate consolidation, because a consolidation group
 shares its obj. Everything outside O / K_A | K_W is bitwise untouched.
 
-Scale shape: the delete log and the affected key/obj dims are delta-sized
-(broadcast joins), and every shuffle/window in an update runs on a
+Scale shape: the delete log is delta-sized between compactions, so each
+view resolves its slice of it on the driver when the view is built and
+applies it as a filter (a broadcast anti-join only past
+``DELETE_FILTER_MAX`` rows — :func:`_anti_delete`); a lookup over the
+views therefore reads no log. The affected key/obj dims are delta-sized
+too (broadcast joins), and every shuffle/window in an update runs on a
 delta-sized slice (link winners come from key-restricted windows —
 :func:`_best_for_keys` — never a dim-sized one); what remains full-width
 are (a) narrow scans: the mentions cache for the affected-norm dim
@@ -88,6 +92,8 @@ delete-log size.
 
 from __future__ import annotations
 
+import functools as _functools
+import operator as _operator
 import threading as _threading
 import time as _time
 
@@ -138,6 +144,22 @@ def _subj_file_key() -> F.Column:
         "substring(subj, 1, length(subj) - locate('#', reverse(subj)))")
 
 
+# Largest delete-log slice (rows of one target and kind) a view turns into
+# a literal filter; a larger one is broadcast into a left-anti join. The
+# filter costs grow with the slice: each key is one py4j call when the view
+# is built, and every query re-optimizes the IN lists in each snapshot arm.
+# The broadcast costs one job per slice and query at any size. Measured
+# (local[4], 4 CPUs; the 880-file V0 catalog of perfbench's kg_update,
+# K synthetic keys in each of the four slices a lookup reads; view build /
+# warm lookup, filter vs broadcast):
+# K=100 1.59/0.54 s vs 0.99/0.70 s; K=300 1.66/0.41 vs 1.02/0.56;
+# K=1000 2.75/0.48 vs 0.80/0.49; K=3000 6.6/0.94 vs 0.93/0.53;
+# K=10k 18.0/2.8 vs 0.81/0.50; K=100k 193/49 vs 1.0/0.73. Per lookup the
+# filter wins up to ~1000 keys; with the build and 8 lookups per view it
+# wins at 300 and loses at 1000.
+DELETE_FILTER_MAX = 300
+
+
 def _deletes_for(catalog, prefix: str, target: str) -> DataFrame | None:
     tbl = f"{prefix}.deletes"
     if not catalog.snapshots(tbl):
@@ -155,15 +177,43 @@ def _anti_delete(df: DataFrame, deletes: DataFrame | None, kind: str,
                  key_col: F.Column, extra: F.Column | None = None
                  ) -> DataFrame:
     """Hide rows matching an equality delete of ``kind`` committed at or
-    after the row's snapshot (``_snap`` column). Broadcast: the delete log
-    is delta-sized between compactions."""
+    after the row's snapshot (``_snap`` column).
+
+    The log is resolved on the driver when the view is built (one
+    ``limit(DELETE_FILTER_MAX + 1)`` probe; ``read_at`` already pinned
+    the log's snapshots, and snapshot directories are immutable). Up to
+    ``DELETE_FILTER_MAX`` rows it becomes a filter: key -> newest
+    ``as_of``, grouped by ``as_of`` into ``key IN (...) AND _snap <= a``
+    terms. ``_snap`` is a literal per ``read_at`` arm, so Catalyst folds
+    the filter per arm and drops it from every arm newer than the log;
+    a query over the view then plans no join and reads no log. Above the
+    bound the log is broadcast into a left-anti join. Both hide exactly
+    the same rows: a NULL key or ``as_of`` on either side matches
+    nothing."""
     if deletes is None:
         return df
     d = deletes.filter(F.col("kind") == kind)
-    cond = (key_col == d["key"]) & (df["_snap"] <= d["as_of"])
+    head = d.select("key", "as_of").limit(DELETE_FILTER_MAX + 1).collect()
+    if len(head) > DELETE_FILTER_MAX:
+        cond = (key_col == d["key"]) & (df["_snap"] <= d["as_of"])
+        if extra is not None:
+            cond = cond & extra
+        return df.join(F.broadcast(d), cond, "left_anti")
+    newest: dict[str, int] = {}
+    for key, as_of in head:
+        if key is not None and as_of is not None:
+            newest[key] = max(as_of, newest.get(key, as_of))
+    if not newest:
+        return df
+    keys_at: dict[int, list[str]] = {}
+    for key, as_of in sorted(newest.items()):
+        keys_at.setdefault(as_of, []).append(key)
+    hit = _functools.reduce(_operator.or_, (
+        key_col.isin(keys) & (F.col("_snap") <= as_of)
+        for as_of, keys in sorted(keys_at.items())))
     if extra is not None:
-        cond = cond & extra
-    return df.join(F.broadcast(d), cond, "left_anti")
+        hit = hit & extra
+    return df.filter(~F.coalesce(hit, F.lit(False)))
 
 
 # ---------------------------------------------------------------------------
@@ -197,8 +247,9 @@ def _file_triples_view(catalog, prefix: str) -> DataFrame:
 
 def nodes_view(catalog, prefix: str = "inc",
                prune_buckets: list[int] | None = None) -> DataFrame:
-    """The canonical entity dim after entity-key deletes (merge-on-read;
-    a no-op chain when the dim was last replaced wholesale).
+    """The canonical entity dim after entity-key deletes (merge-on-read,
+    resolved when the view is built; a no-op chain when the dim was last
+    replaced wholesale).
     ``prune_buckets`` restricts a clustered dim to the listed
     entity-key storage buckets (partition pruning) — deletes still apply,
     so the pruned view is exact for the retained keys."""
@@ -228,9 +279,9 @@ def bands_view(catalog, prefix: str = "inc",
 def edges_view(catalog, prefix: str = "inc",
                dedup: bool = True,
                prune_buckets: list[int] | None = None) -> DataFrame:
-    """Verified similarity edges after bucket-key deletes. ``dedup``
-    collapses the bucket provenance to distinct (id_a, id_b) pairs —
-    the edge set CC consumes."""
+    """Verified similarity edges after bucket-key deletes (resolved when
+    the view is built). ``dedup`` collapses the bucket provenance to
+    distinct (id_a, id_b) pairs — the edge set CC consumes."""
     e = catalog.read_at(f"{prefix}.edges", snapshot_col="_snap",
                         prune_buckets=prune_buckets)
     e = _anti_delete(e, _deletes_for(catalog, prefix, "edges"),
@@ -242,7 +293,9 @@ def edges_view(catalog, prefix: str = "inc",
 def triples_view(catalog, prefix: str = "inc") -> DataFrame:
     """The complete current graph: merged file-scoped families plus the
     entity-maintained same_as family. Equal to run_pipeline(updated
-    corpus)["triples"] up to the provenance tag."""
+    corpus)["triples"] up to the provenance tag. Built once, it can
+    serve any number of lookups: the delete log was resolved into its
+    filters here, so a query over it reads no log."""
     cols = ["subj", "pred", "obj", "repo", "score", "provenance"]
     return (_file_triples_view(catalog, prefix).select(*cols)
             .unionByName(same_as_view(catalog, prefix).select(*cols)))
@@ -1378,11 +1431,11 @@ def compact_graph(spark: SparkSession, catalog, prefix: str = "inc") -> None:
     rewrite raises CommitConflict instead of being silently erased —
     re-run the compaction against the new state."""
     # capture the OCC read-set FIRST, then pin every view EAGERLY on the
-    # driver (view construction resolves the commit log — inside the
-    # stage thunks it would happen at thread-execution time, so the arms
-    # could each see a different catalog state); the whole compaction
-    # then stages against one consistent pre-state and lands as ONE
-    # atomic, validated group commit
+    # driver (view construction resolves the commit log and the delete
+    # log — inside the stage thunks it would happen at thread-execution
+    # time, so the arms could each see a different catalog state); the
+    # whole compaction then stages against one consistent pre-state and
+    # lands as ONE atomic, validated group commit
     tables = ["mentions", "triples", "manifest", "nodes", "same_as",
               "bands", "edges", "deletes"]
     expect = {f"{prefix}.{t}": catalog.current_snapshot(f"{prefix}.{t}")

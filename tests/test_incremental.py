@@ -2,6 +2,9 @@
 triples a from-scratch run_pipeline over the updated corpus emits
 (subj, pred, obj, repo, score — provenance tags differ by design)."""
 
+import re
+from collections import Counter
+
 import pandas as pd
 import pyspark.sql.functions as F
 import pytest
@@ -109,13 +112,47 @@ def test_incremental_matches_rebuild(spark, v0_pdf, v1_pdf,
         zip(v1_pdf["repo"], v1_pdf["path"]))
 
 
+def _bag(df) -> Counter:
+    """Every row of ``df`` with multiplicity (array columns as tuples)."""
+    return Counter(tuple(tuple(v) if isinstance(v, list) else v for v in r)
+                   for r in df.collect())
+
+
+def test_anti_delete_filter_and_join_agree(spark, monkeypatch):
+    """Both sides of the delete-log size switch hide exactly the rows an
+    as_of-scoped equality delete hides: a NULL key-column row survives
+    (without the coalesce, NOT NULL would drop it), a NULL delete key or
+    as_of hides nothing, a key's newest as_of decides, and another
+    kind's rows are ignored."""
+    from test_plans import _physical_nodes
+    rows = spark.createDataFrame(
+        [("a", 1), ("a", 2), ("a", 3), ("b", 1), ("c", 1), (None, 1)],
+        "k string, _snap int")
+    log = spark.createDataFrame(
+        [("file", "a", 1), ("file", "a", 2), ("file", None, 5),
+         ("file", "c", None), ("obj", "b", 9)],
+        "kind string, key string, as_of int")
+    want = Counter([("a", 3), ("b", 1), ("c", 1), (None, 1)])
+    for bound, joins in ((inc.DELETE_FILTER_MAX, False), (0, True)):
+        monkeypatch.setattr(inc, "DELETE_FILTER_MAX", bound)
+        out = inc._anti_delete(rows, log, "file", F.col("k"))
+        plan = _physical_nodes(out)
+        assert any("LeftAnti" in d for _, d in plan) == joins, plan
+        assert _bag(out) == want
+
+
 def test_incremental_canon_mode_matches_full(spark, v0_pdf, v1_pdf,
-                                             tmp_path_factory):
+                                             tmp_path_factory, monkeypatch):
     """canon_mode='incremental' (bucket surgery on the stored blocking
     index + affected-component-only CC) must be indistinguishable from
     the wholesale recanonicalization: identical triples view, identical
     nodes view (canonical assignment included), and the bands/edges
-    tables must equal a from-scratch build's — after compaction too."""
+    tables must equal a from-scratch build's — after compaction too.
+
+    An entity lookup over the updated views plans only its own two
+    broadcast semi-joins (the delete log is a per-view filter), and after
+    two more chained updates every view reads the same rows whether the
+    log is applied as that filter or as the broadcast anti-join."""
     wh_i = str(tmp_path_factory.mktemp("incwh_i"))
     cat_i = Catalog(spark, wh_i)
     v0 = corpus_to_spark(spark, v0_pdf, partitions=4)
@@ -143,6 +180,71 @@ def test_incremental_canon_mode_matches_full(spark, v0_pdf, v1_pdf,
         inc.nodes_view(cat_f).select(*nodes_cols))
     assert _rows(inc.bands_view(cat_i)) == _rows(inc.bands_view(cat_f))
     assert _rows(inc.edges_view(cat_i)) == _rows(inc.edges_view(cat_f))
+
+    # the lookup plan: no anti-join, no scan of the delete log, and only
+    # entity_objects' two broadcast left-semi joins (Catalyst pushes each
+    # into every snapshot arm of the views, so count their build sides)
+    from test_plans import _physical_nodes
+
+    from cosmos_spark import retrieval
+    ents = inc.nodes_view(cat_i).toPandas()
+    name = ents[ents["entity_id"] != ents["canonical_id"]].iloc[0][
+        "canonical_name"]
+    q = retrieval.entity_objects(inc.triples_view(cat_i),
+                                 inc.nodes_view(cat_i), name)
+    nodes = _physical_nodes(q)
+    joins = [(n, d) for n, d in nodes if "Join" in n]
+    assert not any("LeftAnti" in d for _, d in joins), nodes
+    assert not any("/inc/deletes" in d for _, d in nodes), nodes
+    assert all(n == "BroadcastHashJoin" and "LeftSemi" in d
+               for n, d in joins), nodes
+    assert len({re.search(r"\], \[(.*?)\], LeftSemi", d).group(1)
+                for _, d in joins}) == 2, nodes
+    assert q.count() > 0
+
+    # two more chained updates: a file the first update changed goes back
+    # to its v0 text, then forward to v1 again — its file key is deleted
+    # at three as_of snapshots and re-appended after each, and the entity
+    # it defines only in v0 is removed, re-added and removed again
+    both = v0_pdf.merge(v1_pdf, on=["repo", "path"], suffixes=("", "_v1"))
+    back = both[both["content"] != both["content_v1"]].iloc[0]
+    v2_pdf = v1_pdf.copy()
+    hit = (v2_pdf["repo"] == back["repo"]) & (v2_pdf["path"] == back["path"])
+    v2_pdf.loc[hit, ["content", "content_sha256"]] = [
+        back["content"], back["content_sha256"]]
+    for run_id, pdf in (("u2", v2_pdf), ("u3", v1_pdf)):
+        inc.update_graph(spark, cat_i, corpus_to_spark(spark, pdf,
+                                                       partitions=4),
+                         run_id=run_id, canon_mode="incremental")
+    assert _tuples(inc.triples_view(cat_i)) == _tuples(
+        inc.triples_view(cat_f))
+    assert _rows(inc.nodes_view(cat_i).select(*nodes_cols)) == _rows(
+        inc.nodes_view(cat_f).select(*nodes_cols))
+
+    log = cat_i.read_at("inc.deletes").toPandas()
+    files = log[(log["target"] == "triples") & (log["kind"] == "file")]
+    assert files.groupby("key")["as_of"].nunique().max() >= 3
+    assert ((log["target"] == "triples") & (log["kind"] == "obj")).any()
+    assert (log["kind"] == "entity").any() and (log["kind"] == "bucket").any()
+    views = {
+        "manifest": lambda: inc.manifest_view(cat_i),
+        "mentions": lambda: inc.mentions_view(cat_i),
+        "triples": lambda: inc._file_triples_view(cat_i, "inc"),
+        "nodes": lambda: inc.nodes_view(cat_i),
+        "same_as": lambda: inc.same_as_view(cat_i),
+        "bands": lambda: inc.bands_view(cat_i),
+        "edges": lambda: inc.edges_view(cat_i, dedup=False),
+    }
+    filtered = {k: _bag(v()) for k, v in views.items()}
+    plan = _physical_nodes(views["triples"]())
+    assert not any("/inc/deletes" in d for _, d in plan), plan
+    monkeypatch.setattr(inc, "DELETE_FILTER_MAX", 0)
+    plan = _physical_nodes(views["triples"]())
+    assert any("LeftAnti" in d for _, d in plan), plan
+    assert any("/inc/deletes" in d for _, d in plan), plan
+    for k, v in views.items():
+        assert _bag(v()) == filtered[k], k
+    monkeypatch.undo()
 
     # compaction applies the entity/bucket deletes physically
     inc.compact_graph(spark, cat_i)
