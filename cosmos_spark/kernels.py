@@ -387,6 +387,14 @@ def _extract(text: pd.Series, pattern: str) -> pd.DataFrame:
                          "mention_text": vals.to_numpy()})
 
 
+def _no_mentions() -> pd.DataFrame:
+    """Zero mention rows with the dtypes of a non-empty kernel output
+    (``score`` float64, ``link_rep`` bool), so concatenating it with rows
+    of those dtypes leaves them unchanged."""
+    return pd.DataFrame(columns=MENTION_COLUMNS).astype(
+        {"score": "float64", "link_rep": "bool"})
+
+
 def mention_kernel(seg_pdf: pd.DataFrame) -> pd.DataFrame:
     """Extract (def | import | call | ref) mentions from segments.
 
@@ -396,7 +404,7 @@ def mention_kernel(seg_pdf: pd.DataFrame) -> pd.DataFrame:
     """
     seg_pdf = seg_pdf.reset_index(drop=True)
     if len(seg_pdf) == 0:
-        return pd.DataFrame(columns=MENTION_COLUMNS)
+        return _no_mentions()
     text = seg_pdf["text"].fillna("")
 
     parts: list[pd.DataFrame] = []
@@ -420,7 +428,7 @@ def mention_kernel(seg_pdf: pd.DataFrame) -> pd.DataFrame:
 
     m = pd.concat(parts, ignore_index=True)
     if m.empty:
-        return pd.DataFrame(columns=MENTION_COLUMNS)
+        return _no_mentions()
     m = m.drop_duplicates(["ri", "mention_kind", "mention_text"])
 
     src = seg_pdf.loc[m["ri"], ["repo", "path", "commit", "content_sha256",

@@ -27,6 +27,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from ..driver import bounded_rows
+
 
 def _symmetrize(edges: DataFrame, drop_self_loops: bool = False) -> DataFrame:
     """Both directions of an edge relation, deduplicated — the shared
@@ -114,10 +116,10 @@ def adaptive_component_mapping(edges: DataFrame,
                                driver_max_edges: int = 200_000) -> DataFrame:
     """(node, component) for every edge-incident node; component = min
     node id. The runtime size-switch shared by the dedup/canonicalize
-    family: a ``limit(N+1)`` probe proves whether the edge set fits on the
-    driver — if so, one collect + in-memory union-find replaces the whole
-    distributed loop (the AQE-broadcast-threshold idea applied to graph
-    connectivity); otherwise the O(log n)-round star CC runs. Isolated
+    family: a single-job ``driver.bounded_rows`` probe of N+1 rows proves
+    whether the edge set fits on the driver — if so, those rows + an
+    in-memory union-find replace the whole distributed loop (the
+    AQE-broadcast-threshold idea applied to graph connectivity); otherwise the O(log n)-round star CC runs. Isolated
     nodes never appear (callers left-join + coalesce)."""
     from pyspark import StorageLevel
 
@@ -130,7 +132,7 @@ def adaptive_component_mapping(edges: DataFrame,
     own_persist = str(edges.storageLevel) == str(StorageLevel.NONE)
     if own_persist:
         ep = ep.persist(StorageLevel.MEMORY_AND_DISK)
-    head = ep.limit(driver_max_edges + 1).collect()
+    head = bounded_rows(ep, driver_max_edges)
     if len(head) <= driver_max_edges:
         if own_persist:
             ep.unpersist()

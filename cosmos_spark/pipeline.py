@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import types as T
 
 from . import kernels as K
+from .driver import bounded_rows
 
 SEGMENT_SCHEMA = T.StructType([
     T.StructField("repo", T.StringType()),
@@ -172,19 +173,24 @@ def fused_mentions_of(source: DataFrame) -> DataFrame:
 
     def fn(it):
         for pdf in it:
-            seg = K.segment_kernel(pdf)
-            men = K.mention_kernel(seg)
-            markers = seg[["repo", "path", "commit", "content_sha256",
-                           "seg_id"]].copy()
-            markers["mention_id"] = None
-            markers["mention_text"] = None
-            markers["mention_kind"] = SEG_MARKER
-            markers["score"] = 1.0
-            markers["link_rep"] = False
-            yield pd.concat([men, markers[K.MENTION_COLUMNS]],
-                            ignore_index=True)
+            yield _fused_batch(pdf)
 
     return src.mapInPandas(fn, MENTION_SCHEMA)
+
+
+def _fused_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One Arrow batch of :func:`fused_mentions_of`: the batch's mentions,
+    then one marker row per segment."""
+    seg = K.segment_kernel(pdf)
+    men = K.mention_kernel(seg)
+    markers = seg[["repo", "path", "commit", "content_sha256",
+                   "seg_id"]].copy()
+    markers["mention_id"] = None
+    markers["mention_text"] = None
+    markers["mention_kind"] = SEG_MARKER
+    markers["score"] = 1.0
+    markers["link_rep"] = False
+    return pd.concat([men, markers[K.MENTION_COLUMNS]], ignore_index=True)
 
 
 SUBSEG_SCHEMA = T.StructType([
@@ -527,18 +533,19 @@ def canonicalize(entities: DataFrame,
     size-switch AQE applies to join strategies, with a two-level cascade:
 
     1. The entities dim (one row per distinct normalized def name — orders
-       smaller than the corpus) is probed with ``limit(dim_max+1)``; the
-       probe also projects each name's trigram set and band signature
-       (:data:`CANON_TG_EXPR` / :data:`CANON_SIG_EXPR`, the expressions
-       every level and the incremental blocking index share). When the
-       dim fits (<= driver_dim_max, default 500k ~= 40 MB of short
-       strings), bucketing + verify + union-find run driver-side
+       smaller than the corpus) is probed for dim_max+1 rows in one job
+       (:func:`driver.bounded_rows`); the probe also projects each name's
+       trigram set and band signature (:data:`CANON_TG_EXPR` /
+       :data:`CANON_SIG_EXPR`, the expressions every level and the
+       incremental blocking index share). When the dim fits
+       (<= driver_dim_max, default 500k ~= 40 MB of short strings),
+       bucketing + verify + union-find run driver-side
        (:func:`_driver_canonical_mapping`) in the one job that also
        materializes the entities persist for the downstream
        alias/same_as consumers — no grouping shuffle, and the mapping
        goes back as a broadcast join (zero shuffles added downstream).
     2. Otherwise the distributed :func:`canonical_candidate_pairs` plan
-       builds the verified edges; ``limit(max+1)`` probes THEM, and when
+       builds the verified edges; a max+1-row probe reads THEM, and when
        they fit (<= driver_cc_max_edges, default 200k) union-find still
        runs driver-side. The edge relation is persisted *before* the probe
        so the overflow branch reuses the expensive LSH+verify computation
@@ -555,16 +562,16 @@ def canonicalize(entities: DataFrame,
 
     The driver levels hand the mapping back as a LocalRelation
     (:func:`_string_relation`): every consumer of the result — the
-    ``same_as`` triples, and each ``retrieval.entity_objects`` lookup —
-    then reads it inside the JVM. A Python-RDD-backed frame would start a
-    Python worker in every one of those jobs."""
+    ``same_as`` triples, and the entity index ``retrieval.entity_objects``
+    builds once per graph — then reads it inside the JVM. A
+    Python-RDD-backed frame would start a Python worker in every one of
+    those jobs."""
     spark = entities.sparkSession
     e = entities.select("entity_id", "canonical_name")
 
-    dim_head = (e.limit(driver_dim_max + 1)
-                .withColumn("tg", F.expr(CANON_TG_EXPR))
-                .withColumn("sig", F.expr(CANON_SIG_EXPR))
-                .collect())
+    dim_head = bounded_rows(e.withColumn("tg", F.expr(CANON_TG_EXPR))
+                            .withColumn("sig", F.expr(CANON_SIG_EXPR)),
+                            driver_dim_max)
     if len(dim_head) <= driver_dim_max:
         # level 1: whole dim fits — driver-side bucketing over the probed
         # signatures; shares the single return tail below
@@ -575,7 +582,7 @@ def canonicalize(entities: DataFrame,
 
         pairs = (canonical_candidate_pairs(e)
                  .persist(StorageLevel.MEMORY_AND_DISK))
-        head = pairs.limit(driver_cc_max_edges + 1).collect()
+        head = bounded_rows(pairs, driver_cc_max_edges)
         if len(head) <= driver_cc_max_edges:
             pairs.unpersist()
             canon = F.broadcast(_string_relation(

@@ -103,6 +103,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import kernels as K
 from .. import pipeline as P
+from ..driver import bounded_rows, in_keys
 
 _LINK_KINDS = ("call", "import", "ref")
 
@@ -146,8 +147,9 @@ def _subj_file_key() -> F.Column:
 
 # Largest delete-log slice (rows of one target and kind) a view turns into
 # a literal filter; a larger one is broadcast into a left-anti join. The
-# filter costs grow with the slice: each key is one py4j call when the view
-# is built, and every query re-optimizes the IN lists in each snapshot arm.
+# filter costs grow with the slice: every query re-optimizes the IN lists
+# in each snapshot arm, and (when these figures were taken, before
+# ``driver.in_keys``) each key was one py4j call when the view was built.
 # The broadcast costs one job per slice and query at any size. Measured
 # (local[4], 4 CPUs; the 880-file V0 catalog of perfbench's kg_update,
 # K synthetic keys in each of the four slices a lookup reads; view build /
@@ -180,20 +182,21 @@ def _anti_delete(df: DataFrame, deletes: DataFrame | None, kind: str,
     after the row's snapshot (``_snap`` column).
 
     The log is resolved on the driver when the view is built (one
-    ``limit(DELETE_FILTER_MAX + 1)`` probe; ``read_at`` already pinned
+    single-job ``driver.bounded_rows`` probe; ``read_at`` already pinned
     the log's snapshots, and snapshot directories are immutable). Up to
     ``DELETE_FILTER_MAX`` rows it becomes a filter: key -> newest
     ``as_of``, grouped by ``as_of`` into ``key IN (...) AND _snap <= a``
-    terms. ``_snap`` is a literal per ``read_at`` arm, so Catalyst folds
-    the filter per arm and drops it from every arm newer than the log;
-    a query over the view then plans no join and reads no log. Above the
+    terms (each IN list built by ``driver.in_keys``). ``_snap`` is a
+    literal per ``read_at`` arm, so Catalyst folds the filter per arm and
+    drops it from every arm newer than the log; a query over the view
+    then plans no join and reads no log. Above the
     bound the log is broadcast into a left-anti join. Both hide exactly
     the same rows: a NULL key or ``as_of`` on either side matches
     nothing."""
     if deletes is None:
         return df
     d = deletes.filter(F.col("kind") == kind)
-    head = d.select("key", "as_of").limit(DELETE_FILTER_MAX + 1).collect()
+    head = bounded_rows(d.select("key", "as_of"), DELETE_FILTER_MAX)
     if len(head) > DELETE_FILTER_MAX:
         cond = (key_col == d["key"]) & (df["_snap"] <= d["as_of"])
         if extra is not None:
@@ -208,12 +211,14 @@ def _anti_delete(df: DataFrame, deletes: DataFrame | None, kind: str,
     keys_at: dict[int, list[str]] = {}
     for key, as_of in sorted(newest.items()):
         keys_at.setdefault(as_of, []).append(key)
+    k = "_delete_key"  # in_keys takes a column name
     hit = _functools.reduce(_operator.or_, (
-        key_col.isin(keys) & (F.col("_snap") <= as_of)
+        in_keys(k, keys) & (F.col("_snap") <= as_of)
         for as_of, keys in sorted(keys_at.items())))
     if extra is not None:
         hit = hit & extra
-    return df.filter(~F.coalesce(hit, F.lit(False)))
+    return (df.withColumn(k, key_col)
+            .filter(~F.coalesce(hit, F.lit(False))).drop(k))
 
 
 # ---------------------------------------------------------------------------
@@ -447,7 +452,7 @@ def _mapping_from_edges(spark: SparkSession, edges: DataFrame,
                           F.col("canonical_name").alias("name_b")), "id_b")
           .select("id_a", "name_a", "id_b", "name_b")
           .persist(StorageLevel.MEMORY_AND_DISK))
-    head = ej.limit(cap + 1).collect()
+    head = bounded_rows(ej, cap)
     if len(head) <= cap:
         ej.unpersist()
         mapping = P._driver_union_find(head)

@@ -252,7 +252,9 @@ FROM documents
 def q_entity_objects(spark, sf_dir):
     """J6 (`elastic_retriever.py:239-258`): resolve entity 'f1' then its
     child objects through the mentions edges of the materialized graph —
-    the parent/child join index as two broadcast left-semi joins."""
+    the parent/child join index as ``retrieval.entity_objects``' entity
+    index (name -> canonical ids -> ``same_as`` members, built once per
+    frame pair on the driver) and one flat ``obj IN (...)`` scan."""
     from .. import retrieval
     res = _linking_pipeline(spark, sf_dir)
     out = retrieval.entity_objects(res["triples"], res["entities"],

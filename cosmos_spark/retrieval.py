@@ -9,22 +9,30 @@ objects through the parent/child join index (`:239-258`), with both sides
 routed to the same shard (`:143-150`).
 
 Here: plain filters + joins + a row_number window over (segments, triples,
-entities) DataFrames. "Same shard routing" becomes broadcast left-semi
-joins: the query-bounded entity-id set is shipped to every partition of
-the triples, so an entity lookup moves no triple across the cluster.
+entities) DataFrames. The entity index becomes a driver-side map built
+once per (triples, entities) frame pair (name -> canonical ids ->
+``same_as`` members, `:74-89`'s index probed as at `:239-258`): a lookup
+resolves its key set with dict lookups and ships it to every partition of
+the triples as a literal ``IN`` list, so it is one flat scan that moves
+no triple across the cluster. A graph too large for the driver keeps the
+distributed form of the same routing, broadcast left-semi joins.
 """
 
 from __future__ import annotations
 
 import re
+import threading
+import weakref
 from collections.abc import Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from .driver import bounded_rows, in_keys
 from .operators import ranks
 from .operators.dedup import TOKEN_RE
+from .pipeline import CANON_DRIVER_DIM_MAX
 
 
 def docs_matching(documents: DataFrame, terms: list[str],
@@ -165,31 +173,108 @@ def resolve_entity(entities: DataFrame, name: str) -> DataFrame:
             .select(F.col("eid").alias("entity_id")).distinct())
 
 
+# triples frame -> {entities frame -> index, or None past the bound}; both
+# levels weak-keyed, so an entry lives exactly as long as its two frames
+_ENTITY_INDEX: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_ENTITY_INDEX_LOCK = threading.Lock()
+
+
+def _entity_index(triples: DataFrame, entities: DataFrame):
+    """The (name -> canonical ids, canonical id -> ``same_as`` members)
+    maps of one frame pair, built on its first lookup; ``None`` (cached
+    too) when the pair is past the driver bound. The build runs outside
+    the lock: two threads racing on a new pair may both build it, and
+    the first one stored is kept (both read the same frames)."""
+    with _ENTITY_INDEX_LOCK:
+        by_dim = _ENTITY_INDEX.setdefault(triples,
+                                          weakref.WeakKeyDictionary())
+        if entities in by_dim:
+            return by_dim[entities]
+    index = _build_entity_index(triples, entities)
+    with _ENTITY_INDEX_LOCK:
+        return by_dim.setdefault(entities, index)
+
+
+def _build_entity_index(triples: DataFrame, entities: DataFrame):
+    """One single-job probe of the dim and the ``same_as`` edges together
+    -> the index maps, or ``None`` when they exceed
+    ``CANON_DRIVER_DIM_MAX`` rows between them (canonicalize's driver-dim
+    bound, here on everything the index holds).
+
+    The name map is the exact twin of :func:`_resolved_ids`: a dim row
+    answers to its ``canonical_name`` as stored and to each alias lowered
+    by Spark's ``lower``, with ``coalesce(canonical_id, entity_id)``; the
+    member map follows the edges as stored (member -> canonical). NULL
+    ids, names and aliases match nothing, as in the joins; an edge row is
+    the one with a ``member``."""
+    none = F.lit(None).cast("string")
+    dim = entities.select(
+        F.col("canonical_name").alias("name"),
+        F.expr("transform(aliases, a -> lower(a))").alias("aliases"),
+        F.coalesce("canonical_id", "entity_id").alias("id"),
+        none.alias("member"))
+    edges = triples.filter(F.col("pred") == "same_as").select(
+        none.alias("name"), F.lit(None).cast("array<string>").alias("aliases"),
+        F.col("obj").alias("id"), F.col("subj").alias("member"))
+    rows = bounded_rows(dim.unionByName(edges), CANON_DRIVER_DIM_MAX)
+    if len(rows) > CANON_DRIVER_DIM_MAX:
+        return None
+    ids: dict[str, set[str]] = {}
+    members: dict[str, set[str]] = {}
+    for name, aliases, rep, member in rows:
+        if member is not None:
+            members.setdefault(rep, set()).add(member)
+        elif rep is not None:
+            for key in {name, *(aliases or ())}:
+                if key is not None:
+                    ids.setdefault(key, set()).add(rep)
+    return ids, members
+
+
 def entity_objects(triples: DataFrame, entities: DataFrame,
                    name: str) -> DataFrame:
     """The entity -> child-objects join (J6): all segments that mention the
-    named entity (or anything same_as it).
+    named entity (or anything same_as it). Lazy; returns
+    (object_ref, repo, score).
 
-    Two broadcast left-semi joins, the Spark analog of the reference
-    routing parent and child docs to the same shard
-    (`elastic_retriever.py:143-150`): the resolved canonical ids select
-    their ``same_as`` members (edges point member -> canonical), and ids +
-    members select the ``mentions`` triples. The key set is bounded by the
-    query, so it is broadcast and the triples never shuffle; semi-join set
-    semantics make a ``distinct`` on the keys unnecessary. Lazy; returns
-    (object_ref, repo, score)."""
-    ids = _resolved_ids(entities, name)
-    same = triples.filter(F.col("pred") == "same_as")
-    members = (same.join(F.broadcast(ids), F.col("obj") == F.col("eid"),
-                         "left_semi")
-               .select(F.col("subj").alias("eid")))
-    keys = ids.unionByName(members)
+    The reference probes an entity index built once
+    (`elastic_retriever.py:74-89,239-258`). Here the index is
+    :func:`_entity_index`: built by the first lookup on a
+    ``(triples, entities)`` frame pair and held, weak-keyed, for exactly
+    as long as both frames live — no cleanup call. A lookup resolves
+    ``name`` (case-folded by ``str.lower``) -> canonical ids -> their
+    ``same_as`` members with dict lookups and returns
+    ``mentions.filter(obj IN keys)``: one flat scan, no join, no
+    exchange, no broadcast; a miss plans an empty relation and runs no
+    job. The key set is frozen when the call is made.
+
+    Staleness is that of ``persist()`` on the two frames: the index keeps
+    what they held when it was built. The catalog views are pinned to
+    their snapshots when they are built, so for them it is exact; build
+    new views (or re-read the tables) to see a later commit.
+
+    Past ``CANON_DRIVER_DIM_MAX`` dim rows and ``same_as`` edges together
+    the index is not built and the lookup is the distributed form of the same
+    routing (`elastic_retriever.py:143-150`): two broadcast left-semi
+    joins — resolved ids select their ``same_as`` members, and ids +
+    members select the ``mentions`` triples — so the query-bounded key
+    set is shipped to every partition and the triples never shuffle."""
+    index = _entity_index(triples, entities)
     mentions = triples.filter(F.col("pred") == "mentions")
-    return (
-        mentions.join(F.broadcast(keys), F.col("obj") == F.col("eid"),
-                      "left_semi")
-        .select(F.col("subj").alias("object_ref"), "repo", "score")
-    )
+    if index is None:
+        ids = _resolved_ids(entities, name)
+        same = triples.filter(F.col("pred") == "same_as")
+        members = (same.join(F.broadcast(ids), F.col("obj") == F.col("eid"),
+                             "left_semi")
+                   .select(F.col("subj").alias("eid")))
+        hit = mentions.join(F.broadcast(ids.unionByName(members)),
+                            F.col("obj") == F.col("eid"), "left_semi")
+    else:
+        ids, members = index
+        reps = ids.get(name.lower(), set())
+        hit = mentions.filter(in_keys(
+            "obj", reps.union(*(members.get(r, ()) for r in reps))))
+    return hit.select(F.col("subj").alias("object_ref"), "repo", "score")
 
 
 _MODEL_SINGLETON: dict = {}  # per-worker lazy model slot (preload analog)

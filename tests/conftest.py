@@ -26,3 +26,13 @@ def source_df(spark, corpus_pdf):
 def oracle_result(corpus_pdf):
     from cosmos_spark.oracle import run_oracle
     return run_oracle(corpus_pdf)
+
+
+def count_jobs(spark, fn):
+    """``(fn(), number of Spark jobs submitted while it ran)``, counted by
+    the scheduler's job-id window (``dagScheduler().nextJobId()``), so a
+    broadcast or an adaptive stage counts as the job it is."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    start = dag.nextJobId()
+    out = fn()
+    return out, dag.nextJobId() - start

@@ -233,6 +233,123 @@ def test_entity_objects_same_as_aware(graph):
         assert bool(rows) == nonempty, name
 
 
+def test_entity_objects_index_and_overflow_match_reference(
+        spark, graph, monkeypatch):
+    """Both lookup levels — the driver-side entity index and the broadcast
+    semi-joins it gives way to past ``CANON_DRIVER_DIM_MAX`` — equal the
+    pandas reference row for row on a miss, a name that matches only
+    through a case-folded alias, a name that matches two entities, a
+    canonical id with >= 2 same_as members, and an entity whose
+    ``canonical_id`` is NULL."""
+    from test_plans import _physical_nodes
+    schema = ("entity_id string, canonical_name string, "
+              "canonical_id string, aliases array<string>")
+    ents = graph["entities"].select(
+        "entity_id", "canonical_name", "canonical_id", "aliases").toPandas()
+    ents["aliases"] = ents["aliases"].map(list)
+    allt = graph["triples"].toPandas()
+    mentioned = set(allt.loc[allt["pred"] == "mentions", "obj"])
+    names = set(ents["canonical_name"])
+    merged = ents[ents["entity_id"] != ents["canonical_id"]]
+    sizes = merged.groupby("canonical_id").size()
+    big_name = max(
+        ents.set_index("entity_id").loc[sizes[sizes >= 2].index,
+                                        "canonical_name"],
+        key=lambda n: len(_entity_objects_ref(allt, ents, n)))
+    alias = next(a for als, eid in zip(ents["aliases"], ents["entity_id"])
+                 if eid in mentioned for a in als
+                 if a.lower() not in names and a != a.lower()).swapcase()
+    lone = ents[(ents["entity_id"] == ents["canonical_id"])
+                & ~ents["entity_id"].isin(merged["canonical_id"])
+                & ents["entity_id"].isin(mentioned)].index
+    member = merged[merged["entity_id"].isin(mentioned)].index
+    assert len(lone) >= 2 and len(member) >= 1
+    ents.loc[lone[0], "canonical_id"] = None
+    null_name = ents.loc[lone[0], "canonical_name"]
+    # a merged member answers to a lone entity's name as an alias
+    two_name = ents.loc[lone[1], "canonical_name"]
+    ents.at[member[0], "aliases"] = [*ents.at[member[0], "aliases"],
+                                     two_name.upper()]
+    cases = {"no_such_entity_xyz": 0, alias: 1, two_name: 2,
+             big_name.upper(): 1, null_name: 1}
+    for bound, joins in ((retrieval.CANON_DRIVER_DIM_MAX, False), (0, True)):
+        monkeypatch.setattr(retrieval, "CANON_DRIVER_DIM_MAX", bound)
+        t = graph["triples"].select("*")  # a fresh pair: a fresh index
+        e = spark.createDataFrame(ents, schema)
+        for name, n_ids in cases.items():
+            got = retrieval.entity_objects(t, e, name)
+            plan = _physical_nodes(got)
+            # a miss over this in-memory dim folds to an empty relation
+            assert any("Join" in n for n, _ in plan) == (joins and n_ids > 0)
+            got = got.toPandas()
+            rows = sorted(zip(got["object_ref"], got["repo"], got["score"]))
+            want = _entity_objects_ref(allt, ents, name)
+            assert rows == want, (bound, name)
+            assert bool(rows) == (n_ids > 0), (bound, name)
+            hit = {r for r, _, _ in want}
+            if n_ids == 2:  # both entities' mentions are in the answer
+                for i in (lone[1], member[0]):
+                    own = allt[(allt["pred"] == "mentions")
+                               & (allt["obj"] == ents.loc[i, "entity_id"])]
+                    assert set(own["subj"]) <= hit
+
+
+def test_entity_index_built_once_per_frame_pair(spark, graph, monkeypatch):
+    """N lookups on one (triples, entities) frame pair build its index
+    once — one single-job probe, by the first lookup — and later lookups
+    plan without running a job; the entry goes when the frames are
+    collected."""
+    import gc
+    import weakref
+
+    from conftest import count_jobs
+    probes = []
+    real = retrieval.bounded_rows
+    monkeypatch.setattr(retrieval, "bounded_rows",
+                        lambda df, cap: probes.append(cap) or real(df, cap))
+    names = graph["entities"].select("canonical_name").limit(5).toPandas()[
+        "canonical_name"].tolist() + ["no_such_entity_xyz"]
+    t, e = graph["triples"].select("*"), graph["entities"].select("*")
+    gc.collect()  # settle the entries of frames other tests dropped
+    before = len(retrieval._ENTITY_INDEX)
+    for i, name in enumerate(names):
+        q, jobs = count_jobs(
+            spark, lambda: retrieval.entity_objects(t, e, name))
+        assert jobs == (1 if i == 0 else 0), (i, name)
+    assert len(probes) == 1
+    assert len(retrieval._ENTITY_INDEX) == before + 1
+    dead = weakref.ref(t), weakref.ref(e)
+    del t, e, q
+    gc.collect()
+    assert dead[0]() is None and dead[1]() is None
+    assert len(retrieval._ENTITY_INDEX) == before
+
+
+def test_entity_index_concurrent_first_lookups(graph):
+    """Threads racing on a new frame pair's first lookup all answer the
+    same, and the pair keeps one index that later lookups reuse."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    obj = graph["triples"].filter(F.col("pred") == "mentions").first().obj
+    name = graph["entities"].filter(F.col("entity_id") == obj).first()[
+        "canonical_name"]
+    t, e = graph["triples"].select("*"), graph["entities"].select("*")
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as ex:
+            futs = [ex.submit(lambda: sorted(retrieval.entity_objects(
+                t, e, name).collect())) for _ in range(8)]
+            outs = [f.result(timeout=300) for f in futs]
+    finally:
+        sys.setswitchinterval(old)
+    assert outs[0] and all(o == outs[0] for o in outs)
+    stored = retrieval._ENTITY_INDEX[t]
+    assert list(stored.keys()) == [e]
+    assert retrieval._entity_index(t, e) is stored[e]
+
+
 def test_commit_group_atomic_and_optimistic(spark, tmp_path_factory):
     """stage/commit_group: a multi-table group is invisible until the one
     catalog swap, and commit validation (expect=) rejects the whole group

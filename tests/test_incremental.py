@@ -2,7 +2,6 @@
 triples a from-scratch run_pipeline over the updated corpus emits
 (subj, pred, obj, repo, score — provenance tags differ by design)."""
 
-import re
 from collections import Counter
 
 import pandas as pd
@@ -149,10 +148,11 @@ def test_incremental_canon_mode_matches_full(spark, v0_pdf, v1_pdf,
     nodes view (canonical assignment included), and the bands/edges
     tables must equal a from-scratch build's — after compaction too.
 
-    An entity lookup over the updated views plans only its own two
-    broadcast semi-joins (the delete log is a per-view filter), and after
-    two more chained updates every view reads the same rows whether the
-    log is applied as that filter or as the broadcast anti-join."""
+    An entity lookup over the updated views is one flat scan in one job
+    (the delete log is a per-view filter, the entity index a driver-side
+    map), and after two more chained updates every view reads the same
+    rows whether the log is applied as that filter or as the broadcast
+    anti-join."""
     wh_i = str(tmp_path_factory.mktemp("incwh_i"))
     cat_i = Catalog(spark, wh_i)
     v0 = corpus_to_spark(spark, v0_pdf, partitions=4)
@@ -181,26 +181,23 @@ def test_incremental_canon_mode_matches_full(spark, v0_pdf, v1_pdf,
     assert _rows(inc.bands_view(cat_i)) == _rows(inc.bands_view(cat_f))
     assert _rows(inc.edges_view(cat_i)) == _rows(inc.edges_view(cat_f))
 
-    # the lookup plan: no anti-join, no scan of the delete log, and only
-    # entity_objects' two broadcast left-semi joins (Catalyst pushes each
-    # into every snapshot arm of the views, so count their build sides)
-    from test_plans import _physical_nodes
+    # the lookup plan over the updated views: one flat scan (no join, no
+    # exchange, no ExistingRDD) that reads no delete log, and one job
+    from conftest import count_jobs
+    from test_plans import _is_flat_scan, _physical_nodes
 
     from cosmos_spark import retrieval
     ents = inc.nodes_view(cat_i).toPandas()
     name = ents[ents["entity_id"] != ents["canonical_id"]].iloc[0][
         "canonical_name"]
-    q = retrieval.entity_objects(inc.triples_view(cat_i),
-                                 inc.nodes_view(cat_i), name)
+    tv, nv = inc.triples_view(cat_i), inc.nodes_view(cat_i)
+    retrieval.entity_objects(tv, nv, name)  # builds the pair's index
+    q = retrieval.entity_objects(tv, nv, name)
     nodes = _physical_nodes(q)
-    joins = [(n, d) for n, d in nodes if "Join" in n]
-    assert not any("LeftAnti" in d for _, d in joins), nodes
+    assert _is_flat_scan(nodes), nodes
     assert not any("/inc/deletes" in d for _, d in nodes), nodes
-    assert all(n == "BroadcastHashJoin" and "LeftSemi" in d
-               for n, d in joins), nodes
-    assert len({re.search(r"\], \[(.*?)\], LeftSemi", d).group(1)
-                for _, d in joins}) == 2, nodes
-    assert q.count() > 0
+    rows, jobs = count_jobs(spark, q.collect)
+    assert rows and jobs == 1
 
     # two more chained updates: a file the first update changed goes back
     # to its v0 text, then forward to v1 again — its file key is deleted

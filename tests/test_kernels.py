@@ -195,3 +195,29 @@ def test_keywords_not_calls():
     assert "if" not in set(m["mention_text"])
     assert "return" not in set(m["mention_text"])
     assert "print" not in set(m["mention_text"])
+
+
+def test_zero_mention_batch_keeps_dtypes():
+    """A batch whose files have segments but no mentions (an assignment,
+    plain text) gives mention rows with the dtypes of a non-empty one, so
+    the fused batch concatenates them with its segment markers without
+    pandas' empty-entry FutureWarning and keeps score float64 and
+    link_rep bool."""
+    import warnings
+
+    from cosmos_spark.pipeline import SEG_MARKER, _fused_batch
+    batch = pd.concat([_one("r", "a.py", "python", "x = 1\n"),
+                       _one("r", "notes.txt", "text", "plain words here\n")],
+                      ignore_index=True)
+    full = K.mention_kernel(K.segment_kernel(
+        _one("r", "f.py", "python", "def f(x):\n    return g(x)\n")))
+    assert len(full) > 0
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        men = K.mention_kernel(K.segment_kernel(batch))
+        out = _fused_batch(batch)
+    assert len(men) == 0
+    assert men.dtypes.to_dict() == full.dtypes.to_dict()
+    assert (out["mention_kind"] == SEG_MARKER).all() and len(out) == 2
+    assert out["score"].dtype == "float64"
+    assert out["link_rep"].dtype == "bool"

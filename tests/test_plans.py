@@ -203,12 +203,20 @@ def _physical_nodes(df):
     return out
 
 
-def test_entity_objects_is_broadcast_only(spark, source_df, tmp_path):
-    """An entity lookup adds no shuffle and no Python worker: over fresh
+def _is_flat_scan(nodes) -> bool:
+    """No join, no exchange of any kind, no Python-RDD scan."""
+    return not any("Join" in n or "Exchange" in n or "ExistingRDD" in d
+                   for n, d in nodes)
+
+
+def test_entity_objects_is_one_flat_scan(spark, source_df, tmp_path):
+    """An entity lookup is one flat scan of the triples: over fresh
     ``run_pipeline`` output (graph held in memory, canonicalized dim as
-    built) and over the catalog round-trip tables, its plan has no
-    hash-partitioning Exchange, no SortMergeJoin and no ExistingRDD —
-    only broadcast left-semi joins."""
+    built) and over the catalog round-trip tables, its plan has no join,
+    no exchange (broadcast or shuffle) and no ExistingRDD, a hit runs one
+    Spark job once the pair's entity index exists, and a miss runs none."""
+    from conftest import count_jobs
+
     from cosmos_spark import retrieval
     from cosmos_spark.pipeline import run_pipeline, write_graph
     from cosmos_spark.sources import Catalog
@@ -222,18 +230,66 @@ def test_entity_objects_is_broadcast_only(spark, source_df, tmp_path):
     try:
         for t, e in ((triples, res["entities"]),
                      (cat.read("graph.triples"), cat.read("graph.nodes"))):
-            q = retrieval.entity_objects(t, e, name)
+            retrieval.entity_objects(t, e, "warm_the_index")
+            q, jobs = count_jobs(
+                spark, lambda: retrieval.entity_objects(t, e, name))
+            assert jobs == 0  # the index is built; planning runs nothing
             nodes = _physical_nodes(q)
-            text = "\n".join(d for _, d in nodes)
-            assert "hashpartitioning" not in text, text
-            assert "SortMergeJoin" not in text, text
-            assert "ExistingRDD" not in text, text
-            joins = [(n, d) for n, d in nodes if "Join" in n]
-            assert all(n == "BroadcastHashJoin" for n, _ in joins), text
-            assert sum("LeftSemi" in d for _, d in joins) == 2, text
-            assert q.count() > 0
+            assert _is_flat_scan(nodes), nodes
+            rows, jobs = count_jobs(spark, q.collect)
+            assert rows and jobs == 1
+            miss = retrieval.entity_objects(t, e, "no_such_entity_xyz")
+            assert count_jobs(spark, miss.collect) == ([], 0)
     finally:
         triples.unpersist()
+
+
+def test_bounded_rows_is_one_job(spark, tmp_path):
+    """The bounded probe returns what ``limit(cap + 1).collect()`` returns
+    — same rows, attribute access, arrays as lists — in one Spark job at
+    any cap, where ``collect`` runs one job per 1-4-16-partition round."""
+    from conftest import count_jobs
+
+    from cosmos_spark.driver import bounded_rows
+    path = str(tmp_path / "p")
+    (spark.range(0, 800, numPartitions=8)
+     .selectExpr("cast(id as string) as k", "array(id, id * 2) as arr",
+                 "if(id % 5 = 0, null, id / 4) as d")
+     .write.parquet(path))
+    df = spark.read.parquet(path)
+    for cap in (0, 99, 799, 800, 5000):
+        rows, jobs = count_jobs(spark, lambda: bounded_rows(df, cap))
+        assert jobs == 1, cap
+        assert len(rows) == min(cap + 1, 800)
+        if cap >= 800:
+            assert sorted(rows) == sorted(df.collect())
+            assert count_jobs(spark,
+                              lambda: df.limit(cap + 1).collect())[1] > 1
+    r = bounded_rows(df.filter("k = '11'"), 5)
+    assert r == [("11", [11, 22], 2.75)] and r[0].arr == [11, 22]
+    assert bounded_rows(df.filter("k = 'x'"), 5) == []
+
+
+def test_in_keys_matches_isin(spark):
+    """The one-call ``IN`` builder selects exactly what ``Column.isin``
+    selects for keys with quotes, backslashes, commas, SQL comment marks,
+    non-ASCII text and the empty string; NULL keys are dropped, and an
+    empty key set selects nothing without running a job."""
+    from conftest import count_jobs
+
+    from cosmos_spark.driver import in_keys
+    keys = ["a'b", "c\\d", "e,f", "x'), ('y", "-- z", "/* w", "日本語",
+            "é", "", "\\'"]
+    vals = keys + ["a", "b", "c\\", "'", "e", "f", None, "ab"]
+    df = spark.createDataFrame([(v,) for v in vals], "k string")
+    want = sorted(r.k for r in df.filter(F.col("k").isin(keys)).collect())
+    assert want == sorted(keys)
+    got = df.filter(in_keys("k", keys + [None, "a'b"]))
+    assert sorted(r.k for r in got.collect()) == want
+    assert "NULL" not in str(in_keys("k", ["q", None]))
+    for empty in ([], [None]):
+        assert count_jobs(spark, df.filter(in_keys("k", empty)).collect) \
+            == ([], 0)
 
 
 def test_partial_aggregation_single_shuffle(spark):
