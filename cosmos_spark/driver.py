@@ -1,10 +1,11 @@
-"""The two driver-side hops the engine allows itself: a bounded probe that
-brings a provably small relation to the driver, and a key set that goes
-back into a plan as literals.
+"""The driver-side hops the engine allows itself: a bounded probe that
+brings a provably small relation to the driver, and driver rows that go
+back into a plan as literals (a key set) or as a local relation.
 
-Both replace a per-call cost that grows with the input on the driver, not
-in the executors: ``limit(n).collect()`` runs several jobs, and
-``Column.isin`` makes one py4j call per key.
+Each replaces a cost that a naive hop pays per call or per consumer:
+``limit(n).collect()`` runs several jobs, ``Column.isin`` makes one py4j
+call per key, and ``createDataFrame`` over a row list plans a Python RDD
+that every consuming job re-runs in a Python worker.
 """
 
 from __future__ import annotations
@@ -12,7 +13,8 @@ from __future__ import annotations
 from collections.abc import Iterable
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Row
+from pyspark.sql import Column, DataFrame, Row, SparkSession
+from pyspark.sql import types as T
 
 
 def bounded_rows(df: DataFrame, cap: int) -> list[Row]:
@@ -53,3 +55,22 @@ def in_keys(col: str, keys: Iterable[str | None]) -> Column:
     if not lits:
         return F.lit(False)
     return F.expr(f"`{col}` IN ({', '.join(lits)})")
+
+
+def local_relation(spark: SparkSession, rows: list[tuple],
+                   names: tuple[str, ...],
+                   dtype: T.DataType = T.StringType()) -> DataFrame:
+    """Driver-side rows of ``names`` columns, all of type ``dtype`` (a
+    canonical mapping, a list of deleted files, a component mapping over
+    long or string node ids), as a JVM LocalRelation. They go over as one
+    Arrow table, which plans as ``LocalTableScan`` even when empty; a row
+    list (and an empty pandas frame, which skips Arrow) plans as ``Scan
+    ExistingRDD`` over a Python RDD that every consuming job re-runs in a
+    Python worker."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    cols = list(zip(*rows)) if rows else [()] * len(names)
+    atype = to_arrow_type(dtype)
+    return spark.createDataFrame(
+        pa.table({n: pa.array(c, atype) for n, c in zip(names, cols)}),
+        T.StructType([T.StructField(n, dtype) for n in names]))

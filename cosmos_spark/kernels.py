@@ -512,9 +512,9 @@ def entity_id_for(norm_names: pd.Series) -> pd.Series:
     return "ent_" + _sha_series("ent|" + norm_names).str[:16]
 
 
-# (canonicalization blocking lives JVM-side in
-# pipeline.canonical_candidate_pairs: xxhash64 trigram-MinHash bands +
-# exact array-Jaccard verify — no Python kernel in that path)
+# (canonicalization blocking lives JVM-side in pipeline.canon_bands /
+# canon_bucket_edges: xxhash64 trigram-MinHash bands + exact array-Jaccard
+# verify — no Python kernel in that path)
 
 
 # (the former block-local cc_block_kernel was removed in round 2: its

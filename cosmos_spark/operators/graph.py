@@ -25,9 +25,8 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
 
-from ..driver import bounded_rows
+from ..driver import bounded_rows, local_relation
 
 
 def _symmetrize(edges: DataFrame, drop_self_loops: bool = False) -> DataFrame:
@@ -112,18 +111,43 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     return out
 
 
+def union_find_roots(edges) -> dict:
+    """Driver-side union-find over ``(a, b)`` edge pairs: every
+    edge-incident node -> its component's minimum node id (a union always
+    hangs the larger root under the smaller, so a root is its component's
+    minimum). The one in-memory CC core of the driver-sized levels of
+    :func:`adaptive_component_mapping` and ``pipeline.canonicalize``."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        for v in (a, b):
+            if v not in parent:
+                parent[v] = v
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
 def adaptive_component_mapping(edges: DataFrame,
                                driver_max_edges: int = 200_000) -> DataFrame:
     """(node, component) for every edge-incident node; component = min
     node id. The runtime size-switch shared by the dedup/canonicalize
     family: a single-job ``driver.bounded_rows`` probe of N+1 rows proves
     whether the edge set fits on the driver — if so, those rows + an
-    in-memory union-find replace the whole distributed loop (the
-    AQE-broadcast-threshold idea applied to graph connectivity); otherwise the O(log n)-round star CC runs. Isolated
-    nodes never appear (callers left-join + coalesce)."""
+    in-memory union-find (:func:`union_find_roots`) replace the whole
+    distributed loop (the AQE-broadcast-threshold idea applied to graph
+    connectivity), and the mapping goes back as a LocalRelation in the
+    edge columns' own type; otherwise the O(log n)-round star CC runs.
+    Isolated nodes never appear (callers left-join + coalesce)."""
     from pyspark import StorageLevel
 
-    spark = edges.sparkSession
     ep = edges.select("src", "dst")  # probe/scan width: two columns only
     # persist once: the probe, the star path's node derivation and its E
     # materialization otherwise re-run the (possibly expensive — LSH +
@@ -136,26 +160,10 @@ def adaptive_component_mapping(edges: DataFrame,
     if len(head) <= driver_max_edges:
         if own_persist:
             ep.unpersist()
-        parent: dict = {}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for r in head:
-            for v in (r.src, r.dst):
-                if v not in parent:
-                    parent[v] = v
-            ra, rb = find(r.src), find(r.dst)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        rows = [(n, find(n)) for n in parent]
-        ntype = edges.schema["src"].dataType
-        schema = T.StructType([T.StructField("node", ntype),
-                               T.StructField("component", ntype)])
-        return spark.createDataFrame(rows or [], schema)
+        roots = union_find_roots((r.src, r.dst) for r in head)
+        return local_relation(edges.sparkSession, list(roots.items()),
+                              ("node", "component"),
+                              edges.schema["src"].dataType)
     nodes = (ep.select(F.col("src").alias("node"))
              .unionByName(ep.select(F.col("dst").alias("node")))
              .distinct())

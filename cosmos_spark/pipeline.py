@@ -42,7 +42,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import types as T
 
 from . import kernels as K
-from .driver import bounded_rows
+from .driver import bounded_rows, local_relation
+from .operators.graph import connected_components_star, union_find_roots
 
 SEGMENT_SCHEMA = T.StructType([
     T.StructField("repo", T.StringType()),
@@ -324,13 +325,9 @@ CANON_NUM_HASHES = 8    # single-row bands: recall 1-(1-J)^8 at J>=0.7
 CANON_MAX_BUCKET = 64   # hot-bucket cap (same spirit as dedup.minhash_lsh_pairs)
 
 # THE trigram-set expression: canonicalization bands and verifies on it
-# and linking scores aliases with it (best_aliases). Shared verbatim with
-# plans/incremental.py's persisted blocking index
-# (_banded_rows/_bucket_edges): incremental surgery's bit-for-bit
-# equivalence to a full recanonicalization requires both sides to band
-# and sign IDENTICALLY, so there is exactly one definition of each. The
-# set equals kernels._trigrams (a name shorter than 3 characters is its
-# own single trigram, the empty name has none).
+# and linking scores aliases with it (best_aliases). The set equals
+# kernels._trigrams (a name shorter than 3 characters is its own single
+# trigram, the empty name has none).
 def trigram_set_expr(col: str) -> str:
     """SQL distinct character-trigram set of the string column ``col``."""
     return ("array_distinct(filter(transform("
@@ -342,95 +339,78 @@ CANON_TG_EXPR = trigram_set_expr("canonical_name")
 CANON_SIG_EXPR = (f"transform(sequence(0, {CANON_NUM_HASHES - 1}), "
                   f"h -> array_min(transform(tg, t -> xxhash64(t, h))))")
 
-# The pair-generation/verification half of the same one-definition
-# contract: the upper-triangle enumeration over a bucket's sorted rows
-# and the exact trigram-Jaccard verify must also be IDENTICAL on both
-# sides, or a tweak to either silently breaks incremental-vs-rebuild
-# equality (pinned by test_incremental_canon_mode_matches_full). The
-# Jaccard is also the link score: the same double division as
-# kernels.trigram_jaccard, and the kernel's 1.0 when both sets are empty
-# (try_divide's NULL; ANSI 0/0 would raise). Canonicalization drops
-# empty sets first, so the guard never fires there.
+# The exact trigram-Jaccard verify, which is also the link score: the
+# same double division as kernels.trigram_jaccard, and the kernel's 1.0
+# when both sets are empty (try_divide's NULL; ANSI 0/0 would raise).
+# Canonicalization drops empty sets first, so the guard never fires there.
 CANON_JACCARD_EXPR = ("coalesce(try_divide(size(array_intersect(tg_a, tg_b)), "
                       "cast(size(array_union(tg_a, tg_b)) as double)), 1.0D)")
 
 
-def canon_pair_expr(field_map: str) -> str:
-    """Upper-triangle pair enumeration over the sorted ``rows`` array of
-    one blocking bucket: every (x, y) with x before y, projected through
-    ``field_map`` (a struct field list referencing x/y)."""
-    return ("flatten(transform(rows, (x, i) -> "
-            "transform(slice(rows, i + 2, size(rows) - i - 1), "
-            f"y -> struct({field_map}))))")
+# Banding (canon_bands), pair verify (canon_bucket_edges) and edges ->
+# mapping (canon_mapping) are each defined once, here: canonicalize,
+# build_graph, both update_graph modes and the incremental surgery all
+# call them, which is what makes the surgery's bucket-scoped maintenance
+# reproduce a full recanonicalization bit for bit.
+def canon_bands(dim: DataFrame) -> DataFrame:
+    """(entity_id, canonical_name, band, bval) blocking rows: one per
+    trigram-MinHash band per entity with a non-empty trigram set. Each of
+    the CANON_NUM_HASHES values (xxhash64 seeded per band) is an
+    independent blocking key (a single-row LSH band), so a J>=0.7 pair
+    collides on >= 1 key w.p. 1-0.3^8 = 99.993% — unlike prefix
+    blocking, edges are not confined to one block. This is also the
+    persisted form of the incremental blocking index (``{p}.bands``)."""
+    return (dim.select("entity_id", "canonical_name")
+            .withColumn("tg", F.expr(CANON_TG_EXPR))
+            .filter(F.size("tg") > 0)
+            .select("entity_id", "canonical_name",
+                    F.posexplode(F.expr(CANON_SIG_EXPR))
+                    .alias("band", "bval")))
 
 
-def canonical_candidate_pairs(entities: DataFrame,
-                              max_bucket: int = CANON_MAX_BUCKET) -> DataFrame:
-    """Verified similarity edges (id_a, name_a, id_b, name_b) between
-    entities whose names have trigram-Jaccard >= CANON_THRESHOLD.
-
-    Multi-key blocking: each of the CANON_NUM_HASHES trigram-MinHash values
-    (xxhash64 seeded per band) is an independent blocking key (a single-row
-    LSH band), so a J>=0.7 pair collides on >= 1 key w.p. 1-0.3^8 = 99.993%
-    — unlike prefix blocking, edges are not structurally confined to one
-    block. Buckets over ``max_bucket`` are dropped (degenerate names; the
-    19-proposal-cap spirit, `connected_components.py:96,193-196`), bounding
-    the quadratic pairing. Candidates are then *verified* by exact
-    trigram-Jaccard (array_intersect/array_union), so bucket collisions add
-    no false edges.
+def canon_bucket_edges(bands: DataFrame) -> DataFrame:
+    """Verified similarity edges per bucket of :func:`canon_bands` rows:
+    (band, bval, id_a, id_b) with id_a < id_b and exact trigram-Jaccard
+    >= CANON_THRESHOLD. Buckets over CANON_MAX_BUCKET are dropped
+    (degenerate names; the 19-proposal-cap spirit,
+    `connected_components.py:96,193-196`), bounding the quadratic
+    pairing; the verify means bucket collisions add no false edges. A pair
+    appears once per bucket it shares: that provenance is what lets
+    bucket-key deletes maintain the stored edge table exactly.
 
     Entirely JVM-side (HOF lambdas + xxhash64): per-element lambda
     interpretation is acceptable here because the input is the
     distinct-def-name dim — orders smaller than the corpus — and it keeps
-    Python workers (and their cold-start) out of the canonicalization path
-    entirely."""
-    banded = (
-        entities.withColumn("tg", F.expr(CANON_TG_EXPR))
-        .filter(F.size("tg") > 0)
-        .select(F.struct("canonical_name", "entity_id", "tg").alias("row"),
-                F.posexplode(F.expr(CANON_SIG_EXPR)).alias("band", "bval"))
-    )
+    Python workers out of the canonicalization path."""
+    rows = bands.withColumn("tg", F.expr(CANON_TG_EXPR))
     buckets = (
-        banded.groupBy("band", "bval")
-        .agg(F.sort_array(F.collect_list("row")).alias("rows"))
-        .filter((F.size("rows") > 1) & (F.size("rows") <= max_bucket))
-    )
-    pairs = buckets.select(F.explode(F.expr(canon_pair_expr(
-        "x.entity_id as id_a, x.canonical_name as name_a, "
-        "x.tg as tg_a, y.entity_id as id_b, y.canonical_name as name_b, "
-        "y.tg as tg_b"
-    ))).alias("p")).select("p.*").distinct()
-    return (
-        pairs.filter(F.expr(
-            f"({CANON_JACCARD_EXPR}) >= {K.CANON_THRESHOLD}"))
-        .select("id_a", "name_a", "id_b", "name_b")
-    )
+        rows.groupBy("band", "bval")
+        .agg(F.sort_array(F.collect_list(
+            F.struct("entity_id", "canonical_name", "tg"))).alias("rows"))
+        .filter((F.size("rows") > 1) & (F.size("rows") <= CANON_MAX_BUCKET)))
+    # upper-triangle enumeration over each bucket's sorted rows: every
+    # (x, y) with x before y
+    pairs = (
+        buckets.select("band", "bval", F.explode(F.expr(
+            "flatten(transform(rows, (x, i) -> "
+            "transform(slice(rows, i + 2, size(rows) - i - 1), "
+            "y -> struct(x.entity_id as ea, x.tg as tg_a, "
+            "y.entity_id as eb, y.tg as tg_b))))")).alias("p"))
+        .select("band", "bval", "p.*"))
+    return (pairs.filter(F.expr(
+                f"({CANON_JACCARD_EXPR}) >= {K.CANON_THRESHOLD}"))
+            .select("band", "bval",
+                    F.least("ea", "eb").alias("id_a"),
+                    F.greatest("ea", "eb").alias("id_b")))
 
 
-def _union_find_mapping(edges: list[tuple[str, str]],
-                        name: dict[str, str]) -> list[tuple[str, str]]:
+def _union_find_mapping(edges, name: dict[str, str]) -> list[tuple[str, str]]:
     """Union-find over (id_a, id_b) edges. Returns only the non-identity
     (entity_id, canonical_id) mappings; representative = min
     (canonical_name, entity_id) per component."""
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for ia, ib in edges:
-        for i in (ia, ib):
-            if i not in parent:
-                parent[i] = i
-        ra, rb = find(ia), find(ib)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-
     members: dict[str, list[str]] = {}
-    for i in parent:
-        members.setdefault(find(i), []).append(i)
+    for i, root in union_find_roots(edges).items():
+        members.setdefault(root, []).append(i)
     mapping: list[tuple[str, str]] = []
     for ms in members.values():
         rep = min(ms, key=lambda m: (name[m], m))
@@ -438,21 +418,10 @@ def _union_find_mapping(edges: list[tuple[str, str]],
     return mapping
 
 
-def _driver_union_find(rows) -> list[tuple[str, str]]:
-    """Union-find over collected (id_a, name_a, id_b, name_b) edge rows."""
-    name: dict[str, str] = {}
-    edges: list[tuple[str, str]] = []
-    for r in rows:
-        name[r.id_a] = r.name_a
-        name[r.id_b] = r.name_b
-        edges.append((r.id_a, r.id_b))
-    return _union_find_mapping(edges, name)
-
-
 def _driver_canonical_mapping(rows) -> list[tuple[str, str]]:
-    """Driver-side twin of ``canonical_candidate_pairs`` + union-find, run
-    when the entities dim itself fits on the driver (the adaptive fast
-    path of :func:`canonicalize`).
+    """Driver-side twin of :func:`canon_bands` + :func:`canon_bucket_edges`
+    + union-find, run when the entities dim itself fits on the driver
+    (level 1 of :func:`canonicalize`).
 
     ``rows`` carry the SQL trigram set ``tg`` (:data:`CANON_TG_EXPR`) and
     band signature ``sig`` (:data:`CANON_SIG_EXPR`), computed by Catalyst in
@@ -473,7 +442,7 @@ def _driver_canonical_mapping(rows) -> list[tuple[str, str]]:
     trigram_bit: dict[str, int] = {}
     buckets: dict[tuple[int, int], list[int]] = {}
     for r in rows:
-        if not r.tg:  # the distributed branch's size(tg) > 0 filter
+        if not r.tg:  # canon_bands' size(tg) > 0 filter
             continue
         i = len(ids)
         ids.append(r.entity_id)
@@ -505,117 +474,110 @@ CANON_DRIVER_DIM_MAX = 500_000
 _MAPPING_COLUMNS = ("entity_id", "canonical_id")
 
 
-def _string_relation(spark: SparkSession, rows: list[tuple],
-                     names: tuple[str, ...]) -> DataFrame:
-    """Driver-side rows of string columns ``names`` (a canonical
-    mapping, a list of deleted files) as a JVM LocalRelation. They go
-    over as one Arrow table, which plans as ``LocalTableScan`` even when
-    empty; a row list (and an empty pandas frame, which skips Arrow)
-    plans as ``Scan ExistingRDD`` over a Python RDD that every consuming
-    job re-runs in a Python worker."""
-    import pyarrow as pa
-    cols = list(zip(*rows)) if rows else [()] * len(names)
-    return spark.createDataFrame(
-        pa.table({n: pa.array(c, pa.string()) for n, c in zip(names, cols)}),
-        ", ".join(f"{n} string" for n in names))
+def canon_mapping(edges: DataFrame, names: DataFrame) -> DataFrame:
+    """Non-identity (entity_id, canonical_id) rows of the connected
+    components of an (id_a, id_b) edge set; representative = min
+    (canonical_name, entity_id) per component, ``names`` supplying
+    (entity_id, canonical_name).
+
+    Adaptive: a single-job probe (:func:`driver.bounded_rows`) reads up to
+    CANON_DRIVER_CC_MAX_EDGES + 1 name-joined edges, persisted first so
+    the overflow branch reuses them. When they fit, union-find runs on the
+    driver and the mapping goes back as a broadcast LocalRelation
+    (:func:`driver.local_relation`: its consumers read it in the JVM, no
+    Python worker, no shuffle). Otherwise the iterative large/small-star
+    CC (:mod:`operators.graph`) runs over only the edge-incident nodes:
+    name-similarity components can be chain-shaped (a~b~c with a!~c),
+    where min-label propagation would need O(chain length) rounds —
+    large/small-star needs O(log n)."""
+    from pyspark import StorageLevel
+
+    cap = CANON_DRIVER_CC_MAX_EDGES
+    nm = names.select("entity_id", "canonical_name")
+    ej = (edges.select("id_a", "id_b")
+          .join(nm.select(F.col("entity_id").alias("id_a"),
+                          F.col("canonical_name").alias("name_a")), "id_a")
+          .join(nm.select(F.col("entity_id").alias("id_b"),
+                          F.col("canonical_name").alias("name_b")), "id_b")
+          .select("id_a", "name_a", "id_b", "name_b")
+          .persist(StorageLevel.MEMORY_AND_DISK))
+    head = bounded_rows(ej, cap)
+    if len(head) <= cap:
+        ej.unpersist()
+        name = {}
+        for r in head:
+            name[r.id_a], name[r.id_b] = r.name_a, r.name_b
+        return F.broadcast(local_relation(
+            edges.sparkSession,
+            _union_find_mapping([(r.id_a, r.id_b) for r in head], name),
+            _MAPPING_COLUMNS))
+    cc = connected_components_star(
+        ej.select(F.col("id_a").alias("node"))
+        .unionByName(ej.select(F.col("id_b").alias("node"))).distinct(),
+        ej.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")))
+    lab = cc.join(nm, cc["node"] == nm["entity_id"]).select(
+        "node", "component", "canonical_name")
+    rep = (lab.groupBy("component")
+           .agg(F.min(F.struct("canonical_name",
+                               F.col("node").alias("eid"))).alias("r"))
+           .select("component", F.col("r.eid").alias("canonical_id")))
+    out = (lab.join(rep, "component")
+           .filter(F.col("node") != F.col("canonical_id"))
+           .select(F.col("node").alias("entity_id"), "canonical_id"))
+    # star CC localCheckpoints eagerly per round, so the persisted edges
+    # are fully consumed by the time it returns (cache-leak fix, ADVICE r2)
+    ej.unpersist()
+    return out
 
 
-def canonicalize(entities: DataFrame,
-                 driver_cc_max_edges: int = CANON_DRIVER_CC_MAX_EDGES,
-                 driver_dim_max: int = CANON_DRIVER_DIM_MAX
-                 ) -> DataFrame:
+def canonicalize(entities: DataFrame) -> DataFrame:
     """Connected components over the multi-key-blocked similarity edges
     (the scale replacement for `link.py:113` drop_duplicates; fixpoint
     semantics from the reference's bbox merge, `group_cls.py:60-144`).
 
     Edges come from MinHash-band blocking + exact verify — recall-safe
     across name prefixes. The whole step is *adaptive*, the same runtime
-    size-switch AQE applies to join strategies, with a two-level cascade:
+    size-switch AQE applies to join strategies, with a three-level cascade
+    whose driver bounds (CANON_DRIVER_DIM_MAX, CANON_DRIVER_CC_MAX_EDGES)
+    are read at call time:
 
     1. The entities dim (one row per distinct normalized def name — orders
-       smaller than the corpus) is probed for dim_max+1 rows in one job
-       (:func:`driver.bounded_rows`); the probe also projects each name's
-       trigram set and band signature (:data:`CANON_TG_EXPR` /
-       :data:`CANON_SIG_EXPR`, the expressions every level and the
-       incremental blocking index share). When the dim fits
-       (<= driver_dim_max, default 500k ~= 40 MB of short strings),
-       bucketing + verify + union-find run driver-side
+       smaller than the corpus) is probed for CANON_DRIVER_DIM_MAX + 1 rows
+       in one job (:func:`driver.bounded_rows`); the probe also projects
+       each name's trigram set and band signature (:data:`CANON_TG_EXPR` /
+       :data:`CANON_SIG_EXPR`). When the dim fits (500k ~= 40 MB of short
+       strings), bucketing + verify + union-find run driver-side
        (:func:`_driver_canonical_mapping`) in the one job that also
-       materializes the entities persist for the downstream
-       alias/same_as consumers — no grouping shuffle, and the mapping
-       goes back as a broadcast join (zero shuffles added downstream).
-    2. Otherwise the distributed :func:`canonical_candidate_pairs` plan
-       builds the verified edges; a max+1-row probe reads THEM, and when
-       they fit (<= driver_cc_max_edges, default 200k) union-find still
-       runs driver-side. The edge relation is persisted *before* the probe
-       so the overflow branch reuses the expensive LSH+verify computation
-       instead of recomputing it.
-    3. Else the iterative large/small-star CC (:mod:`operators.graph`)
-       runs over only the edge-incident nodes (isolated entities never
-       enter the loop).
+       materializes the entities persist for the downstream alias/same_as
+       consumers — no grouping shuffle, and the mapping goes back as a
+       broadcast LocalRelation (zero shuffles added downstream).
+    2. Otherwise the distributed :func:`canon_bands` +
+       :func:`canon_bucket_edges` plan builds the verified edges, and
+       :func:`canon_mapping` turns them into the mapping: driver
+       union-find while they fit CANON_DRIVER_CC_MAX_EDGES (a broadcast
+       LocalRelation again),
+    3. else the iterative large/small-star CC over only the edge-incident
+       nodes (isolated entities never enter the loop).
 
     All levels block on the same signature values and drop the same
     over-cap buckets, so they return the same mapping.
     Representative per component = min (canonical_name, entity_id).
     Returns ``entities`` + ``canonical_id`` (canonical_id == entity_id for
-    isolated/representative entities).
-
-    The driver levels hand the mapping back as a LocalRelation
-    (:func:`_string_relation`): every consumer of the result — the
-    ``same_as`` triples, and the entity index ``retrieval.entity_objects``
-    builds once per graph — then reads it inside the JVM. A
-    Python-RDD-backed frame would start a Python worker in every one of
-    those jobs."""
-    spark = entities.sparkSession
+    isolated/representative entities). With a driver-level mapping the
+    result keeps ``entities``' partitioning (a broadcast join): a writer
+    that wants the layout of a shuffled join hashes it itself."""
     e = entities.select("entity_id", "canonical_name")
-
     dim_head = bounded_rows(e.withColumn("tg", F.expr(CANON_TG_EXPR))
                             .withColumn("sig", F.expr(CANON_SIG_EXPR)),
-                            driver_dim_max)
-    if len(dim_head) <= driver_dim_max:
-        # level 1: whole dim fits — driver-side bucketing over the probed
-        # signatures; shares the single return tail below
-        canon = F.broadcast(_string_relation(
-            spark, _driver_canonical_mapping(dim_head), _MAPPING_COLUMNS))
+                            CANON_DRIVER_DIM_MAX)
+    if len(dim_head) <= CANON_DRIVER_DIM_MAX:
+        canon = F.broadcast(local_relation(
+            entities.sparkSession, _driver_canonical_mapping(dim_head),
+            _MAPPING_COLUMNS))
     else:
-        from pyspark import StorageLevel
-
-        pairs = (canonical_candidate_pairs(e)
-                 .persist(StorageLevel.MEMORY_AND_DISK))
-        head = bounded_rows(pairs, driver_cc_max_edges)
-        if len(head) <= driver_cc_max_edges:
-            pairs.unpersist()
-            canon = F.broadcast(_string_relation(
-                spark, _driver_union_find(head), _MAPPING_COLUMNS))
-        else:
-            from .operators.graph import connected_components_star
-            edges = pairs
-            nodes = (edges.select(F.col("id_a").alias("node"))
-                     .unionByName(edges.select(F.col("id_b").alias("node")))
-                     .distinct())
-            # star CC: name-similarity components can be chain-shaped
-            # (a~b~c with a!~c), where min-label propagation would need
-            # O(chain length) rounds — large/small-star needs O(log n)
-            cc = connected_components_star(
-                nodes, edges.select(F.col("id_a").alias("src"),
-                                    F.col("id_b").alias("dst")))
-            lab = cc.join(e, cc["node"] == e["entity_id"]).select(
-                "node", "component", "canonical_name")
-            rep = (
-                lab.groupBy("component")
-                .agg(F.min(F.struct("canonical_name",
-                                    F.col("node").alias("eid"))).alias("r"))
-                .select("component", F.col("r.eid").alias("canonical_id"))
-            )
-            canon = (lab.join(rep, "component")
-                     .filter(F.col("node") != F.col("canonical_id"))
-                     .select(F.col("node").alias("entity_id"),
-                             "canonical_id"))
-            # connected_components_star localCheckpoints eagerly per
-            # round, so the persisted edge relation has been fully
-            # consumed by the time it returns — release it (cache-leak
-            # fix, ADVICE r2).
-            pairs.unpersist()
+        canon = canon_mapping(
+            canon_bucket_edges(canon_bands(e)).select("id_a", "id_b")
+            .distinct(), e)
     return (
         entities.join(canon, "entity_id", "left")
         .withColumn("canonical_id",

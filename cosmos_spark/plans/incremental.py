@@ -24,16 +24,20 @@ the Iceberg snapshot analog — `sources/catalog.py`):
   incremental-canonicalization mode; replaced wholesale in full mode.
 - ``{p}.same_as``    the canonicalization triple family — a function of
   the stored similarity graph. Entity-key deletes + appends
-  (incremental mode) or wholesale replace (full mode).
-- ``{p}.bands``      (band, bval, entity_id, canonical_name): the
-  MinHash-band blocking keys of every dim entity — the persisted
-  blocking index incremental canonicalization is maintained against.
-  Entity-key deletes + appends.
+  (incremental mode) or wholesale replace (full mode). A build and a
+  full-mode update take both from :func:`pipeline.canonicalize`, the
+  call run_pipeline makes.
+- ``{p}.bands``      (entity_id, canonical_name, band, bval): the
+  MinHash-band blocking keys of every dim entity
+  (:func:`pipeline.canon_bands`) — the persisted blocking index
+  incremental canonicalization is maintained against. Entity-key
+  deletes + appends.
 - ``{p}.edges``      (band, bval, id_a, id_b): VERIFIED similarity
-  edges with bucket provenance (the same pair may appear under several
-  buckets; the read view dedups). Bucket-key deletes + appends — bucket
-  provenance is what makes cap semantics (buckets > max_bucket emit
-  nothing) exactly maintainable when membership crosses the cap.
+  edges with bucket provenance (:func:`pipeline.canon_bucket_edges`;
+  the same pair may appear under several buckets; the read view
+  dedups). Bucket-key deletes + appends — bucket provenance is what
+  makes cap semantics (buckets > CANON_MAX_BUCKET emit nothing) exactly
+  maintainable when membership crosses the cap.
 - ``{p}.deletes``    one equality-delete log for all targets:
   (target, kind, key, as_of). ``as_of`` is the target table's snapshot id
   at delete time — a delete hides only rows from snapshots <= as_of, so a
@@ -101,9 +105,8 @@ import pyspark.sql.functions as F
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
-from .. import kernels as K
 from .. import pipeline as P
-from ..driver import bounded_rows, in_keys
+from ..driver import bounded_rows, in_keys, local_relation
 
 _LINK_KINDS = ("call", "import", "ref")
 
@@ -379,102 +382,21 @@ def _keys_closure(aliases: DataFrame, keys: DataFrame) -> DataFrame:
 # incremental canonicalization: persisted blocking index + similarity graph
 #
 # The similarity relation depends ONLY on canonical_name (trigram MinHash
-# bands -> exact-Jaccard verify, pipeline.canonical_candidate_pairs), and
-# entity ids are content hashes of the name — so an update changes the
-# graph exactly where names appear or disappear. Storing the band index and
-# the verified edge set (bucket-scoped) makes every maintenance step
-# delta-sized, and recomputing ONLY the connected components that touch
-# added/removed entities reproduces a full recanonicalization bit-for-bit:
-# an edge between two untouched entities is untouched, so a component can
-# change only if it contains a touched entity or gains an edge whose
-# endpoint is touched — that closure is exactly the old components of the
-# touched seed set, merged through new edges.
+# bands -> exact-Jaccard verify), and entity ids are content hashes of the
+# name — so an update changes the graph exactly where names appear or
+# disappear. Storing the band index and the verified edge set
+# (bucket-scoped) makes every maintenance step delta-sized, and
+# recomputing ONLY the connected components that touch added/removed
+# entities reproduces a full recanonicalization bit-for-bit: an edge
+# between two untouched entities is untouched, so a component can change
+# only if it contains a touched entity or gains an edge whose endpoint is
+# touched — that closure is exactly the old components of the touched
+# seed set, merged through new edges. Banding, verify and edges -> mapping
+# are pipeline's one definition of each (P.canon_bands,
+# P.canon_bucket_edges, P.canon_mapping); a build and a full-mode update
+# take their mapping from P.canonicalize itself, the call run_pipeline
+# makes.
 # ---------------------------------------------------------------------------
-
-# ONE definition of the banding expressions (pipeline.py) — surgery's
-# bit-for-bit parity with a full recanonicalization depends on it
-_TG_EXPR = P.CANON_TG_EXPR
-
-
-def _banded_rows(dim: DataFrame) -> DataFrame:
-    """(band, bval, entity_id, canonical_name) blocking rows — one per
-    MinHash band per entity (pipeline.canonical_candidate_pairs's banding,
-    xxhash64 seeded per band), the persisted form of the blocking index."""
-    return (dim.select("entity_id", "canonical_name")
-            .withColumn("tg", F.expr(_TG_EXPR))
-            .filter(F.size("tg") > 0)
-            .select("entity_id", "canonical_name",
-                    F.posexplode(F.expr(P.CANON_SIG_EXPR))
-                    .alias("band", "bval")))
-
-
-def _bucket_edges(bands: DataFrame) -> DataFrame:
-    """Verified similarity edges per bucket: (band, bval, id_a, id_b) with
-    id_a < id_b, exact trigram-Jaccard >= CANON_THRESHOLD, buckets over
-    CANON_MAX_BUCKET dropped (identical semantics to
-    pipeline.canonical_candidate_pairs, but KEEPING bucket provenance so
-    bucket-key deletes can maintain the edge table exactly)."""
-    rows = bands.withColumn("tg", F.expr(_TG_EXPR))
-    buckets = (
-        rows.groupBy("band", "bval")
-        .agg(F.sort_array(F.collect_list(
-            F.struct("entity_id", "canonical_name", "tg"))).alias("rows"))
-        .filter((F.size("rows") > 1) &
-                (F.size("rows") <= P.CANON_MAX_BUCKET)))
-    pairs = (
-        buckets.select("band", "bval", F.explode(F.expr(P.canon_pair_expr(
-            "x.entity_id as ea, x.tg as tg_a, "
-            "y.entity_id as eb, y.tg as tg_b"))).alias("p"))
-        .select("band", "bval", "p.*"))
-    return (pairs.filter(F.expr(
-                f"({P.CANON_JACCARD_EXPR}) >= {K.CANON_THRESHOLD}"))
-            .select("band", "bval",
-                    F.least("ea", "eb").alias("id_a"),
-                    F.greatest("ea", "eb").alias("id_b")))
-
-
-def _mapping_from_edges(spark: SparkSession, edges: DataFrame,
-                        names: DataFrame,
-                        driver_cc_max_edges: int | None = None) -> DataFrame:
-    """Non-identity (entity_id, canonical_id) rows from a (id_a, id_b)
-    edge set; representative = min (canonical_name, entity_id) per
-    component. Adaptive like pipeline.canonicalize: collected union-find
-    when the edge set provably fits the driver, else distributed
-    large/small-star CC. ``names`` supplies (entity_id, canonical_name)."""
-    cap = (P.CANON_DRIVER_CC_MAX_EDGES if driver_cc_max_edges is None
-           else driver_cc_max_edges)
-    schema = "entity_id string, canonical_id string"
-    nm = names.select("entity_id", "canonical_name")
-    ej = (edges
-          .join(nm.select(F.col("entity_id").alias("id_a"),
-                          F.col("canonical_name").alias("name_a")), "id_a")
-          .join(nm.select(F.col("entity_id").alias("id_b"),
-                          F.col("canonical_name").alias("name_b")), "id_b")
-          .select("id_a", "name_a", "id_b", "name_b")
-          .persist(StorageLevel.MEMORY_AND_DISK))
-    head = bounded_rows(ej, cap)
-    if len(head) <= cap:
-        ej.unpersist()
-        mapping = P._driver_union_find(head)
-        return spark.createDataFrame(mapping or [], schema)
-    from ..operators.graph import connected_components_star
-    nodes = (ej.select(F.col("id_a").alias("node"))
-             .unionByName(ej.select(F.col("id_b").alias("node")))
-             .distinct())
-    cc = connected_components_star(
-        nodes, ej.select(F.col("id_a").alias("src"),
-                         F.col("id_b").alias("dst")))
-    lab = cc.join(nm, cc["node"] == nm["entity_id"]).select(
-        "node", "component", "canonical_name")
-    rep = (lab.groupBy("component")
-           .agg(F.min(F.struct("canonical_name",
-                               F.col("node").alias("eid"))).alias("r"))
-           .select("component", F.col("r.eid").alias("canonical_id")))
-    out = (lab.join(rep, "component")
-           .filter(F.col("node") != F.col("canonical_id"))
-           .select(F.col("node").alias("entity_id"), "canonical_id"))
-    ej.unpersist()  # star CC localCheckpoints eagerly per round
-    return out
 
 
 def _run_writes(catalog, stage_thunks, pre_staged=(),
@@ -501,7 +423,13 @@ def _dim_writes(catalog, prefix: str, canon: DataFrame,
     """Stage thunks for everything that is a function of the entity dim:
     canonical nodes + the same_as family, both replaced wholesale.
     ``cluster_by`` applies only on a build's first nodes write — updates
-    inherit the table's declared spec."""
+    inherit the table's declared spec.
+
+    ``canon`` is hashed on ``entity_id`` first: a driver-level mapping
+    joins by broadcast, so ``canon`` would otherwise keep the dim's
+    partitioning, and nodes/same_as would lose the file layout of a
+    shuffled join (more, smaller files: more bytes per stored triple)."""
+    canon = canon.repartition("entity_id")
     nodes = canon.select("entity_id", "canonical_name", "canonical_id",
                          "aliases", "types")
     same = (
@@ -569,16 +497,11 @@ def build_graph(spark: SparkSession, source: DataFrame, catalog,
     # recompute the missing partitions (i.e. re-run the whole mentions
     # aggregation once per sink)
     entities.count()
-    bands = _banded_rows(entities)
-    edges = _bucket_edges(bands).persist(StorageLevel.MEMORY_AND_DISK)
-    # canonical mapping FROM the stored-edge universe, so incremental
-    # component surgery later composes with exactly this graph
-    mapping = _mapping_from_edges(spark, edges.select("id_a", "id_b")
-                                  .distinct(), entities)
-    canon = (entities.join(mapping, "entity_id", "left")
-             .withColumn("canonical_id",
-                         F.coalesce(F.col("canonical_id"),
-                                    F.col("entity_id"))))
+    # run_pipeline's own canonicalization; the stored blocking index and
+    # edges come from the same banding/verify, so incremental component
+    # surgery later composes with exactly this mapping
+    canon = P.canonicalize(entities)
+    bands = P.canon_bands(entities)
     links = P.link_mentions(mentions, P.aliases_of(entities))
     triples = P.triples_of(markers, mentions, links, canon, run_id=run_id)
     try:
@@ -587,7 +510,8 @@ def build_graph(spark: SparkSession, source: DataFrame, catalog,
             lambda: catalog.stage(bands, f"{prefix}.bands", "append",
                                   sort_within_by=("entity_id",),
                                   cluster_by=cb("bval")),
-            lambda: catalog.stage(edges, f"{prefix}.edges", "append",
+            lambda: catalog.stage(P.canon_bucket_edges(bands),
+                                  f"{prefix}.edges", "append",
                                   sort_within_by=("band", "bval"),
                                   cluster_by=cb("bval")),
             lambda: catalog.stage(
@@ -607,22 +531,21 @@ def build_graph(spark: SparkSession, source: DataFrame, catalog,
                      "triples", "manifest")})
     finally:
         # a failed attempt (staged-write error, CommitConflict on the
-        # prefix) must not leave dim/edge caches pinned for the session
-        edges.unpersist()
+        # prefix) must not leave the dim cache pinned for the session
         entities.unpersist()
     return {"triples": triples_view(catalog, prefix)}
 
 
-def _maintain_canon(spark, catalog, prefix: str, run_id: str, mode: str,
+def _maintain_canon(catalog, prefix: str, run_id: str, mode: str,
                     nodes_pre: DataFrame, dim_new: DataFrame,
                     affected_norms: DataFrame, pre_snap: dict,
                     profile: dict | None = None):
     """Maintain the canonicalization family (nodes, same_as, bands,
-    edges) for one update. Returns (write thunks, delete rows | None,
-    persisted frames to release after the commit).
+    edges) for one update. Returns (write thunks, delete rows | None).
 
-    ``full``: recompute bands/edges/mapping over the whole dim, replace
-    all four tables (dim-sized writes — right while the dim is small).
+    ``full``: canonicalize the whole dim (:func:`pipeline.canonicalize`,
+    the call run_pipeline makes), rebuild bands/edges from it, replace
+    all four tables (dim-sized writes).
 
     ``incremental``: exact delta surgery. Names that appeared/disappeared
     (the only changes the name-based similarity relation can see) drive
@@ -633,25 +556,18 @@ def _maintain_canon(spark, catalog, prefix: str, run_id: str, mode: str,
     dims (prunable further by clustering nodes on canonical_id and bands
     on entity_id)."""
     tm = _StageTimer(profile)
-    MAD = StorageLevel.MEMORY_AND_DISK
     if mode == "full":
-        bands_new = _banded_rows(dim_new)
-        edges_new = _bucket_edges(bands_new).persist(MAD)
-        mapping = _mapping_from_edges(
-            spark, edges_new.select("id_a", "id_b").distinct(), dim_new)
-        canon = (dim_new.join(mapping, "entity_id", "left")
-                 .withColumn("canonical_id",
-                             F.coalesce(F.col("canonical_id"),
-                                        F.col("entity_id"))))
-        writes = _dim_writes(catalog, prefix, canon, run_id) + [
+        bands_new = P.canon_bands(dim_new)
+        writes = _dim_writes(catalog, prefix, P.canonicalize(dim_new),
+                             run_id) + [
             lambda: catalog.stage(bands_new, f"{prefix}.bands",
                                   "overwrite",
                                   sort_within_by=("entity_id",)),
-            lambda: catalog.stage(edges_new, f"{prefix}.edges",
-                                  "overwrite",
+            lambda: catalog.stage(P.canon_bucket_edges(bands_new),
+                                  f"{prefix}.edges", "overwrite",
                                   sort_within_by=("band", "bval")),
         ]
-        return writes, None, (edges_new,)
+        return writes, None
 
     # --- incremental surgery ---
     # Every delta frame below is EAGERLY localCheckpointed, not persisted:
@@ -719,15 +635,15 @@ def _maintain_canon(spark, catalog, prefix: str, run_id: str, mode: str,
     # 2. bucket surgery on the stored blocking index: every bucket that
     #    gains or loses a member is recomputed WHOLE from the post-state
     #    membership (synthesized plan-side; commits land later), which
-    #    reproduces the max_bucket cap semantics exactly — a bucket
+    #    reproduces the CANON_MAX_BUCKET cap semantics exactly — a bucket
     #    crossing the cap in either direction re-emits correctly.
     #    gone's blocking rows are a pure function of (entity_id,
     #    canonical_name) — recomputed, never scanned from storage
     # one tagged checkpoint for both banded arms (same consolidation as
     # `slices` above); add_bands stays a lazy flat-scan filter of it
-    delta_bands = (_banded_rows(new_e).withColumn("_src", F.lit("new"))
+    delta_bands = (P.canon_bands(new_e).withColumn("_src", F.lit("new"))
                    .unionByName(
-                       _banded_rows(gone).withColumn("_src", F.lit("gone")))
+                       P.canon_bands(gone).withColumn("_src", F.lit("gone")))
                    .transform(_delta_ckpt))
     add_bands = delta_bands.filter(F.col("_src") == "new").drop("_src")
     aff_buckets = (delta_bands.select("band", "bval")
@@ -751,7 +667,7 @@ def _maintain_canon(spark, catalog, prefix: str, run_id: str, mode: str,
                  .join(F.broadcast(gone.select("entity_id")),
                        "entity_id", "left_anti")
                  .unionByName(add_bands))
-    new_edges = _bucket_edges(bands_aff).transform(_delta_ckpt)
+    new_edges = P.canon_bucket_edges(bands_aff).transform(_delta_ckpt)
     tm.mark("canon_new_edges")
     edges_pre_b = edges_view(catalog, prefix, dedup=False)
     old_aff_edges = (edges_view(catalog, prefix, dedup=False,
@@ -794,7 +710,7 @@ def _maintain_canon(spark, catalog, prefix: str, run_id: str, mode: str,
     sub_edges = edges_post.join(
         F.broadcast(members.selectExpr("entity_id AS id_a")),
         "id_a", "left_semi")
-    map_slice = _mapping_from_edges(spark, sub_edges, members)
+    map_slice = P.canon_mapping(sub_edges, members)
     mem_map = (members.join(map_slice, "entity_id", "left")
                .withColumn("canonical_id",
                            F.coalesce(F.col("canonical_id"),
@@ -865,7 +781,7 @@ def _maintain_canon(spark, catalog, prefix: str, run_id: str, mode: str,
     ]
     # localCheckpoint blocks are released when the frames are GC'd —
     # nothing to unpersist
-    return writes, dels, ()
+    return writes, dels
 
 
 _AQE_KEY = "spark.sql.adaptive.enabled"
@@ -916,7 +832,6 @@ def update_graph(spark: SparkSession, catalog, incoming: DataFrame,
                  prefix: str = "inc", run_id: str = "inc1",
                  collect_stats: bool = True,
                  canon_mode: str = "auto",
-                 canon_dim_max: int | None = None,
                  profile: dict | None = None) -> dict:
     """Absorb a corpus delta — see :func:`_update_graph_impl` for the
     full contract (this wrapper only scopes session conf).
@@ -938,7 +853,7 @@ def update_graph(spark: SparkSession, catalog, incoming: DataFrame,
     try:
         return _update_graph_impl(
             spark, catalog, incoming, deleted, prefix, run_id,
-            collect_stats, canon_mode, canon_dim_max, profile,
+            collect_stats, canon_mode, profile,
             _restore_conf=restore, _pinned=pinned)
     finally:
         restore()  # one-shot: no-op if _restore_conf already ran
@@ -962,7 +877,6 @@ def _update_graph_impl(spark: SparkSession, catalog, incoming: DataFrame,
                        prefix: str = "inc", run_id: str = "inc1",
                        collect_stats: bool = True,
                        canon_mode: str = "auto",
-                       canon_dim_max: int | None = None,
                        profile: dict | None = None,
                        _restore_conf=lambda: None,
                        _pinned: list | None = None) -> dict:
@@ -974,17 +888,16 @@ def _update_graph_impl(spark: SparkSession, catalog, incoming: DataFrame,
     skips the one post-commit count job).
 
     ``canon_mode`` selects how the canonicalization family is
-    maintained: ``"full"`` recomputes bands/edges/mapping over the whole
-    dim and replaces nodes/same_as/bands/edges wholesale (cheapest when
-    the dim is small — one banding job, no surgery); ``"incremental"``
-    performs delta-sized surgery on the stored blocking index and edge
-    set and recomputes ONLY the affected connected components (exact —
-    the similarity graph is a function of names, so it changes exactly
-    where names appear/disappear; see the module banner). ``"auto"``
-    (default) switches on the measured dim size at ``canon_dim_max``
-    (default pipeline.CANON_DRIVER_DIM_MAX) — the same philosophy as
-    canonicalize's adaptive cascade: wholesale while the dim is provably
-    small, surgical once dim-sized rewrites would dominate the update.
+    maintained: ``"full"`` recanonicalizes the whole dim
+    (:func:`pipeline.canonicalize`) and replaces nodes/same_as/bands/edges
+    wholesale (no surgery); ``"incremental"`` performs delta-sized
+    surgery on the stored blocking index and edge set and recomputes ONLY
+    the affected connected components (exact — the similarity graph is a
+    function of names, so it changes exactly where names appear/disappear;
+    see the module banner). ``"auto"`` (default) picks ``"incremental"``
+    once the dim exceeds pipeline.CANON_DRIVER_DIM_MAX, canonicalize's
+    driver-memory cap for its level-1 probe — a memory bound, not a
+    measured full-vs-incremental crossover.
 
     ``profile``: optional dict that receives per-stage wall seconds
     (see :class:`_StageTimer`) — used by ``scripts/profile_inc.py`` to
@@ -1006,7 +919,7 @@ def _update_graph_impl(spark: SparkSession, catalog, incoming: DataFrame,
     elif isinstance(deleted, DataFrame):
         deleted_df = deleted.select("repo", "path")
     else:
-        deleted_df = P._string_relation(spark, deleted, ("repo", "path"))
+        deleted_df = local_relation(spark, deleted, ("repo", "path"))
 
     # capture the OCC read-set FIRST, before pinning any view: a writer
     # committing between this capture and a view pin makes the pinned
@@ -1156,10 +1069,9 @@ def _update_graph_impl(spark: SparkSession, catalog, incoming: DataFrame,
     # the partially-cached dim
     n_dim = dim_new.count()
     tm.mark("dim_new")
-    dim_cap = (P.CANON_DRIVER_DIM_MAX if canon_dim_max is None
-               else canon_dim_max)
     mode = (canon_mode if canon_mode != "auto"
-            else ("incremental" if n_dim > dim_cap else "full"))
+            else ("incremental" if n_dim > P.CANON_DRIVER_DIM_MAX
+                  else "full"))
 
     # 6-8 below are THREE mutually independent eager chains — canon
     # surgery, the re-link slice, and the delta's file-local families —
@@ -1207,8 +1119,8 @@ def _update_graph_impl(spark: SparkSession, catalog, incoming: DataFrame,
         return run
 
     def _canon_chain():
-        writes, dels, extra = _maintain_canon(
-            spark, catalog, prefix, run_id, mode, nodes_pre, dim_new,
+        writes, dels = _maintain_canon(
+            catalog, prefix, run_id, mode, nodes_pre, dim_new,
             affected_norms, pre_snap, profile=profile)
         if mode == "incremental":
             # The four canon writes are delta-sized functions of frames
@@ -1221,8 +1133,8 @@ def _update_graph_impl(spark: SparkSession, catalog, incoming: DataFrame,
             with _cf.ThreadPoolExecutor(max_workers=len(writes)) as wex:
                 staged = [f.result()
                           for f in [wex.submit(t) for t in writes]]
-            return staged, dels, extra, True
-        return writes, dels, extra, False
+            return staged, dels, True
+        return writes, dels, False
 
     def _relink_chain():
         # keys won by O in the new dim = winners-in-O of the keys O
@@ -1335,7 +1247,7 @@ def _update_graph_impl(spark: SparkSession, catalog, incoming: DataFrame,
         tm.mark("affected_objs_overlapped")
         _f_relink = _ex.submit(_timed("chain_relink", _relink_chain))
         _f_delta = _ex.submit(_timed("chain_delta", _delta_chain))
-        canon_writes, canon_dels, canon_extra, canon_staged = \
+        canon_writes, canon_dels, canon_staged = \
             _f_canon.result()
         recompute_keys, ment_re = _f_relink.result()
         delta_t = _f_delta.result()
@@ -1399,7 +1311,7 @@ def _update_graph_impl(spark: SparkSession, catalog, incoming: DataFrame,
         # also on CommitConflict: a retrying caller replans from scratch,
         # so the attempt's caches must not accumulate
         for frame in (delta, touched, affected_norms, affected_objs,
-                      dim_new, aliases_new, recompute_keys, *canon_extra):
+                      dim_new, aliases_new, recompute_keys):
             frame.unpersist()
     return {"n_delta_files": n_delta, "n_touched_old": n_touched,
             "n_affected_norms": n_norms, "n_affected_objs": n_objs,

@@ -8,6 +8,9 @@ import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
+from conftest import python_rdd_scans
+
+from cosmos_spark import pipeline as P
 from cosmos_spark.corpus import _sha, corpus_to_spark, make_corpus
 from cosmos_spark.pipeline import run_pipeline
 from cosmos_spark.plans import incremental as inc
@@ -19,6 +22,33 @@ CMP = ["subj", "pred", "obj", "repo", "score"]
 def _tuples(df) -> set:
     pdf = df.select(*CMP).toPandas()
     return set(map(tuple, pdf.itertuples(index=False)))
+
+
+def _spy_canon_stages(monkeypatch) -> dict:
+    """Wrap ``Catalog.stage`` so every staged canonicalization write
+    (nodes, same_as, bands, edges) records the Python-RDD scans of its
+    plan: {table: [scans of each write]}."""
+    seen: dict = {}
+    stage = Catalog.stage
+
+    def spy(self, df, table, *args, **kwargs):
+        if table.rsplit(".", 1)[-1] in ("nodes", "same_as", "bands",
+                                        "edges"):
+            seen.setdefault(table, []).append(python_rdd_scans(df))
+        return stage(self, df, table, *args, **kwargs)
+
+    monkeypatch.setattr(Catalog, "stage", spy)
+    return seen
+
+
+def _assert_canon_writes_jvm_only(seen: dict) -> None:
+    """All four canonicalization tables were staged, and none of their
+    plans reads a Python RDD."""
+    assert sorted(seen) == ["inc.bands", "inc.edges", "inc.nodes",
+                            "inc.same_as"], seen
+    assert not any(scans for writes in seen.values() for scans in writes), \
+        seen
+    seen.clear()
 
 
 @pytest.fixture(scope="module")
@@ -61,14 +91,16 @@ def v0_pdf(v1_pdf):
 
 
 def test_incremental_matches_rebuild(spark, v0_pdf, v1_pdf,
-                                     tmp_path_factory):
+                                     tmp_path_factory, monkeypatch):
     wh = str(tmp_path_factory.mktemp("incwh"))
     cat = Catalog(spark, wh)
     v0 = corpus_to_spark(spark, v0_pdf, partitions=4)
     v1 = corpus_to_spark(spark, v1_pdf, partitions=4)
+    canon_writes = _spy_canon_stages(monkeypatch)
 
     # initial build reproduces a plain pipeline run on v0
     inc.build_graph(spark, v0, cat)
+    _assert_canon_writes_jvm_only(canon_writes)
     assert _tuples(inc.triples_view(cat)) == _tuples(
         run_pipeline(spark, v0, workdir=str(
             tmp_path_factory.mktemp("wd0")))["triples"])
@@ -78,6 +110,8 @@ def test_incremental_matches_rebuild(spark, v0_pdf, v1_pdf,
     deleted = [("org0/repo_00", "extra/dead1.py"),
                ("org1/repo_01", "extra/dead2.py")]
     stats = inc.update_graph(spark, cat, v1, deleted=deleted)
+    assert stats["canon_mode"] == "full"
+    _assert_canon_writes_jvm_only(canon_writes)
     n_new = sum(1 for i in range(len(v1_pdf)) if i % 5 == 1)
     n_changed = sum(1 for i in range(len(v1_pdf)) if i % 5 == 2)
     assert stats["n_delta_files"] == n_new + n_changed
@@ -311,16 +345,22 @@ def test_update_deletion_only(spark, v1_pdf, tmp_path_factory):
 
 
 def test_clustered_layout_surgery_matches_unclustered(spark, v0_pdf, v1_pdf,
-                                                      tmp_path_factory):
+                                                      tmp_path_factory,
+                                                      monkeypatch):
     """bucket-clustered storage (build_graph cluster_buckets=N, the
     Iceberg bucket(N, key) layout): the spec is declared once, inherited
     by every surgery append and by compaction, the incremental update is
     bit-identical to the unclustered layout's, and the surgery's
-    stored-table reads plan as _bucket partition pruning."""
+    stored-table reads plan as _bucket partition pruning. The update runs
+    the surgery's mapping through the distributed star-CC branch
+    (CANON_DRIVER_CC_MAX_EDGES=0), and no canonicalization write of the
+    build or the update reads a Python RDD."""
     cat_c = Catalog(spark, str(tmp_path_factory.mktemp("incwh_cl")))
     v0 = corpus_to_spark(spark, v0_pdf, partitions=4)
     v1 = corpus_to_spark(spark, v1_pdf, partitions=4)
+    canon_writes = _spy_canon_stages(monkeypatch)
     inc.build_graph(spark, v0, cat_c, cluster_buckets=8)
+    _assert_canon_writes_jvm_only(canon_writes)
     assert cat_c.cluster_spec("inc.nodes") == ("entity_id", 8)
     assert cat_c.cluster_spec("inc.bands") == ("bval", 8)
     assert cat_c.cluster_spec("inc.edges") == ("bval", 8)
@@ -328,9 +368,17 @@ def test_clustered_layout_surgery_matches_unclustered(spark, v0_pdf, v1_pdf,
 
     deleted = [("org0/repo_00", "extra/dead1.py"),
                ("org1/repo_01", "extra/dead2.py")]
-    stats = inc.update_graph(spark, cat_c, v1, deleted=deleted,
-                             canon_mode="incremental")
+    star_runs = []
+    star = P.connected_components_star
+    with monkeypatch.context() as m:
+        m.setattr(P, "CANON_DRIVER_CC_MAX_EDGES", 0)
+        m.setattr(P, "connected_components_star",
+                  lambda *a, **kw: star_runs.append(1) or star(*a, **kw))
+        stats = inc.update_graph(spark, cat_c, v1, deleted=deleted,
+                                 canon_mode="incremental")
     assert stats["canon_mode"] == "incremental"
+    assert star_runs
+    _assert_canon_writes_jvm_only(canon_writes)
     # surgery appends inherited the clustering (snapshot entries carry it)
     for t in ("nodes", "bands", "edges"):
         assert all(s.get("cluster_by") for s in cat_c.snapshots(f"inc.{t}"))

@@ -68,15 +68,27 @@ def test_near_dedup_end_to_end(docs):
 
 def test_adaptive_component_mapping_paths_agree(spark):
     """The driver union-find path and the forced star-CC path produce the
-    identical (node, component) mapping."""
-    edges = spark.createDataFrame(pd.DataFrame(
-        {"src": [1, 2, 10, 11], "dst": [2, 3, 11, 12]}))
-    a = graph.adaptive_component_mapping(edges).toPandas()
-    b = graph.adaptive_component_mapping(edges,
-                                         driver_max_edges=0).toPandas()
-    am = dict(zip(a["node"], a["component"]))
-    bm = dict(zip(b["node"], b["component"]))
-    assert am == bm == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10}
+    identical (node, component) mapping, for long and for string node
+    ids; the driver path hands it back as a JVM LocalRelation in the edge
+    columns' own type, never a Python RDD scan."""
+    from conftest import python_rdd_scans
+    cases = [
+        ({"src": [1, 2, 10, 11], "dst": [2, 3, 11, 12]},
+         {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10}),
+        ({"src": ["b", "c", "x", "y"], "dst": ["a", "b", "y", "z"]},
+         {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x", "z": "x"}),
+    ]
+    for cols, want in cases:
+        edges = spark.createDataFrame(pd.DataFrame(cols))
+        driver = graph.adaptive_component_mapping(edges)
+        assert driver.schema["node"].dataType == edges.schema["src"].dataType
+        assert not python_rdd_scans(driver)
+        a = driver.toPandas()
+        b = graph.adaptive_component_mapping(edges,
+                                             driver_max_edges=0).toPandas()
+        am = dict(zip(a["node"], a["component"]))
+        bm = dict(zip(b["node"], b["component"]))
+        assert am == bm == want
 
 
 def test_compile_search_tree(spark):

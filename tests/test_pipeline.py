@@ -114,20 +114,22 @@ def test_canonicalization_cross_prefix_recall(pipeline_result):
     assert (ent("xload_config"), ent("load_config")) in same
 
 
-def test_canonicalize_all_three_branches_agree(spark, source_df):
+def test_canonicalize_all_three_branches_agree(spark, source_df,
+                                               monkeypatch):
     """All levels of the adaptive cascade must produce the same mapping:
     (1) dim-fits driver fast path (default), (2) distributed pairs +
-    driver union-find (forced via driver_dim_max=0), (3) distributed
-    iterative star-CC (forced via both =0)."""
+    driver union-find (forced via CANON_DRIVER_DIM_MAX=0), (3) distributed
+    iterative star-CC (forced via both driver bounds =0)."""
     from cosmos_spark import pipeline as P
     mentions = P.mentions_of(P.segments_of(source_df))
     entities = P.entities_of(mentions).cache()
     a = P.canonicalize(entities).select(
         "entity_id", "canonical_id").toPandas()
-    b = P.canonicalize(entities, driver_dim_max=0).select(
+    monkeypatch.setattr(P, "CANON_DRIVER_DIM_MAX", 0)
+    b = P.canonicalize(entities).select(
         "entity_id", "canonical_id").toPandas()
-    c = P.canonicalize(entities, driver_dim_max=0,
-                       driver_cc_max_edges=0).select(
+    monkeypatch.setattr(P, "CANON_DRIVER_CC_MAX_EDGES", 0)
+    c = P.canonicalize(entities).select(
         "entity_id", "canonical_id").toPandas()
     sa = set(zip(a["entity_id"], a["canonical_id"]))
     sb = set(zip(b["entity_id"], b["canonical_id"]))
@@ -137,7 +139,8 @@ def test_canonicalize_all_three_branches_agree(spark, source_df):
     entities.unpersist()
 
 
-def test_canonicalize_levels_agree_with_over_cap_buckets(spark, tmp_path):
+def test_canonicalize_levels_agree_with_over_cap_buckets(spark, tmp_path,
+                                                         monkeypatch):
     """Buckets over CANON_MAX_BUCKET are dropped, so the levels agree only
     if they all block on the same band values: on a dim with over-cap
     buckets (the 400-file vocabulary corpus), the driver fast path, both
@@ -163,15 +166,19 @@ def test_canonicalize_levels_agree_with_over_cap_buckets(spark, tmp_path):
                .agg(F.max("count")).first()[0])
     assert biggest > P.CANON_MAX_BUCKET
 
-    def mapping(**kw):
-        c = P.canonicalize(entities, **kw).toPandas()
+    def mapping(**bounds):
+        with monkeypatch.context() as m:
+            for k, v in bounds.items():
+                m.setattr(P, k, v)
+            c = P.canonicalize(entities).toPandas()
         c = c[c["entity_id"] != c["canonical_id"]]
         return set(zip(c["entity_id"], c["canonical_id"]))
 
     level1 = mapping()
     assert level1
-    assert level1 == mapping(driver_dim_max=0)
-    assert level1 == mapping(driver_dim_max=0, driver_cc_max_edges=0)
+    assert level1 == mapping(CANON_DRIVER_DIM_MAX=0)
+    assert level1 == mapping(CANON_DRIVER_DIM_MAX=0,
+                             CANON_DRIVER_CC_MAX_EDGES=0)
 
     def same_as(t):
         return set(map(tuple, t.filter(F.col("pred") == "same_as")

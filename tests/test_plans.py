@@ -157,7 +157,8 @@ def test_export_rank_no_full_table_single_partition(spark):
                for ln in plan.splitlines()), plan
 
 
-def test_canonicalize_fast_path_mapping_is_broadcast(spark, source_df):
+def test_canonicalize_fast_path_mapping_is_broadcast(spark, source_df,
+                                                     monkeypatch):
     """The driver-side canonicalization levels must attach their mapping
     as a broadcast join of a JVM LocalRelation — zero shuffles added
     downstream of the dim, and no Python RDD scan (``ExistingRDD``) for
@@ -172,13 +173,14 @@ def test_canonicalize_fast_path_mapping_is_broadcast(spark, source_df):
         "entity_id": ["ent_a", "ent_b", "ent_c"],
         "canonical_name": ["alpha_beta", "gamma_delta", "zq"]}))
     for dim_max in (P.CANON_DRIVER_DIM_MAX, 0):  # level 1, level 2
-        out = P.canonicalize(entities, driver_dim_max=dim_max)
+        monkeypatch.setattr(P, "CANON_DRIVER_DIM_MAX", dim_max)
+        out = P.canonicalize(entities)
         plan = _plan(out)
         assert "BroadcastHashJoin" in plan, plan
         assert "SortMergeJoin" not in plan, plan
         assert "ExistingRDD" not in plan, plan
 
-        out = P.canonicalize(lonely, driver_dim_max=dim_max)
+        out = P.canonicalize(lonely)
         assert "ExistingRDD" not in _plan(out)
         analyzed = out._jdf.queryExecution().analyzed().toString()
         assert "LocalRelation <empty>, [entity_id#" in analyzed, analyzed
