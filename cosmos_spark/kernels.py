@@ -519,5 +519,7 @@ def entity_id_for(norm_names: pd.Series) -> pd.Series:
 
 # (the former block-local cc_block_kernel was removed in round 2: its
 # prefix-4 blocking was recall-unsafe — pipeline.canonicalize now uses
-# MinHash-band blocking + operators.graph.connected_components, and the
-# oracle uses an independent exhaustive all-pairs union-find)
+# MinHash-band blocking + a driver union-find (operators.graph
+# union_find_roots) or, past the dim cap, operators.graph
+# connected_components; the oracle uses an independent exhaustive
+# all-pairs union-find)

@@ -247,9 +247,10 @@ def near_dedup(df: DataFrame, id_col: str, text_col: str,
     graph -> keep the min-id representative per duplicate cluster.
 
     Returns ``df`` plus ``dup_of`` (the representative's id, null for
-    keepers) and ``keep`` (boolean). The CC is adaptive (driver union-find
-    when the verified edge set provably fits, else distributed star CC);
-    the final attach is a plain equi-join (not a forced broadcast): on a
+    keepers) and ``keep`` (boolean). The CC is
+    :func:`graph.connected_components` (driver union-find when the
+    verified edge set provably fits, else distributed star CC); the final
+    attach is a plain equi-join (not a forced broadcast): on a
     heavily duplicated corpus the mapping can approach the corpus size,
     and AQE picks the strategy at runtime.
 
@@ -257,7 +258,7 @@ def near_dedup(df: DataFrame, id_col: str, text_col: str,
     (id_a, id_b, ...) edge relation (e.g. one shared/materialized across
     several consumers); the LSH + verify stages are then skipped.
     """
-    from .graph import adaptive_component_mapping
+    from .graph import connected_components
 
     if verified_pairs is not None:
         verified = verified_pairs
@@ -268,7 +269,7 @@ def near_dedup(df: DataFrame, id_col: str, text_col: str,
                                        shingle_k, threshold)
     edges = verified.select(F.col("id_a").alias("src"),
                             F.col("id_b").alias("dst"))
-    cc = adaptive_component_mapping(edges)
+    cc = connected_components(edges)
     mapping = (cc.filter(F.col("node") != F.col("component"))
                .select(F.col("node").alias(id_col),
                        F.col("component").alias("dup_of")))

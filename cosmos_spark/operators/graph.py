@@ -1,23 +1,23 @@
 """Distributed graph operators.
 
-``connected_components`` is the general iterative CC for edge relations that
-*can* cross any blocking scheme (the scale-out replacement for the
-reference's in-memory fixpoint merge, `group_cls.py:94-122`, and for
-`link.py:113` drop_duplicates-style dedup). The KG pipeline's
-canonicalization doesn't need it (its edges are block-local by
-construction, see pipeline.canonicalize); it exists for graphs built from
-arbitrary edges — e.g. cross-repo same_as chains or MinHash-LSH candidate
-pairs spanning bands.
+``connected_components`` is the one edges -> components operator: the
+scale-out replacement for the reference's in-memory fixpoint merge
+(`group_cls.py:94-122`) and for `link.py:113` drop_duplicates-style
+dedup. Canonicalization (over ``struct(canonical_name, entity_id)``
+nodes), ``near_dedup`` and ``q_cc_components`` all call it.
 
-Algorithm: min-label propagation (a simplified large-star step per
-iteration) — converges in O(component diameter) rounds; every round is one
-shuffle join + one aggregation. Convergence detection exploits
-monotonicity: labels only ever decrease, so an unchanged label multiset
-means no node changed. The check is *probabilistic* — count + sum of
-64-bit xxhash64 per round — so a hash-sum collision across changed rows
-could terminate one round early (probability ~2^-64 per round; replaces a
-self-join change count, halving the jobs of the naive loop).
-Skew note: a giant component's label traffic is spread by the groupBy hash
+Adaptive, the AQE-broadcast-threshold idea applied to graph connectivity:
+a single-job probe proves whether the edge set fits on the driver
+(DRIVER_CC_MAX_EDGES); if so an in-memory union-find replaces the whole
+distributed loop. Otherwise alternating large-star/small-star runs
+(Kiveris et al., "Connected Components in MapReduce and Beyond",
+SoCC'14): O(log n) rounds whatever a component's diameter, each round
+two groupBy+join passes over the edge relation. Convergence detection is
+*probabilistic* — count + sum of 64-bit xxhash64 over the edge multiset
+per round — so a hash-sum collision across changed rows could end the
+loop one round early (probability ~2^-64 per round). A loop that runs
+out of rounds raises instead of returning a partly merged mapping.
+Skew note: a giant component's traffic is spread by the groupBy hash
 shuffle; AQE splits oversized reduce partitions.
 """
 
@@ -25,98 +25,31 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 from ..driver import bounded_rows, local_relation
 
+# Edges up to which connected_components runs union-find on the driver.
+DRIVER_CC_MAX_EDGES = 200_000
+# Large/small-star rounds before the distributed path gives up; a chain of
+# n nodes needs O(log n) of them.
+CC_MAX_ROUNDS = 20
 
-def _symmetrize(edges: DataFrame, drop_self_loops: bool = False) -> DataFrame:
-    """Both directions of an edge relation, deduplicated — the shared
-    undirected-view preamble (connected_components keeps self-loops,
-    which are harmless under min-propagation; label_propagation drops
-    them so a node never votes for itself)."""
+
+def _symmetrize(edges: DataFrame) -> DataFrame:
+    """Both directions of an edge relation, self-loops dropped (so a node
+    never votes for itself in label_propagation), deduplicated."""
     sym = edges.select("src", "dst").unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    if drop_self_loops:
-        sym = sym.filter(F.col("src") != F.col("dst"))
-    return sym.distinct()
-
-
-def connected_components(nodes: DataFrame, edges: DataFrame,
-                         max_iters: int = 25) -> DataFrame:
-    """nodes: (node), edges: (src, dst) undirected-as-given (symmetrized
-    here). Returns (node, component) with component = min node id in the
-    component."""
-    from pyspark import StorageLevel
-
-    sym = _symmetrize(edges).persist(StorageLevel.MEMORY_AND_DISK)
-
-    labels = nodes.select(
-        F.col("node"), F.col("node").alias("component")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    def _sig(df: DataFrame) -> tuple:
-        # labels are monotonically non-increasing under min-propagation, so
-        # an unchanged multiset signature (count + 64-bit hash-sum) detects
-        # the fixpoint; the check is probabilistic — a sum collision across
-        # changed rows (~2^-64/round) would end the loop one round early
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64(F.col("node").cast("string"),
-                             F.col("component").cast("string"))
-                  .cast("decimal(38,0)")).alias("s"),
-        ).collect()[0]
-        return (row["n"], row["s"])
-
-    prev_sig = _sig(labels)
-    converged = False
-    for i in range(max_iters):
-        neighbor = (
-            sym.join(labels, sym["dst"] == labels["node"])
-            .select(F.col("src").alias("node"), "component")
-        )
-        new_labels = (
-            labels.unionByName(neighbor)
-            .groupBy("node").agg(F.min("component").alias("component"))
-        )
-        # truncate lineage periodically so the nested plan stays shallow
-        if (i + 1) % 8 == 0:
-            new_labels = new_labels.localCheckpoint()
-        else:
-            new_labels = new_labels.persist(StorageLevel.MEMORY_AND_DISK)
-        sig = _sig(new_labels)  # the round's single materializing job
-        old = labels
-        labels = new_labels
-        old.unpersist()
-        if sig == prev_sig:
-            converged = True
-            break
-        prev_sig = sig
-    sym.unpersist()
-    if not converged:
-        # min-propagation is O(component diameter): falling out of the
-        # loop mid-propagation would silently UNDER-MERGE (distinct
-        # labels inside one component) — fail loudly instead
-        labels.unpersist()
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iters} "
-            f"rounds — a component's diameter exceeds the cap; raise "
-            f"max_iters or use connected_components_star (O(log n) "
-            f"rounds, diameter-independent)")
-    # Hand back a non-persisted materialization: localCheckpoint blocks are
-    # released by the ContextCleaner once the frame is GC'd, so repeated
-    # harness invocations don't accumulate cached label frames (the loop's
-    # own persists are already released above).
-    out = labels.localCheckpoint(eager=True)
-    labels.unpersist()
-    return out
+    return sym.filter(F.col("src") != F.col("dst")).distinct()
 
 
 def union_find_roots(edges) -> dict:
     """Driver-side union-find over ``(a, b)`` edge pairs: every
-    edge-incident node -> its component's minimum node id (a union always
+    edge-incident node -> its component's minimum node (a union always
     hangs the larger root under the smaller, so a root is its component's
-    minimum). The one in-memory CC core of the driver-sized levels of
-    :func:`adaptive_component_mapping` and ``pipeline.canonicalize``."""
+    minimum). The driver path of :func:`connected_components` and the
+    in-memory CC of ``pipeline.canonicalize``'s level 1."""
     parent: dict = {}
 
     def find(x):
@@ -135,17 +68,18 @@ def union_find_roots(edges) -> dict:
     return {n: find(n) for n in parent}
 
 
-def adaptive_component_mapping(edges: DataFrame,
-                               driver_max_edges: int = 200_000) -> DataFrame:
-    """(node, component) for every edge-incident node; component = min
-    node id. The runtime size-switch shared by the dedup/canonicalize
-    family: a single-job ``driver.bounded_rows`` probe of N+1 rows proves
-    whether the edge set fits on the driver — if so, those rows + an
-    in-memory union-find (:func:`union_find_roots`) replace the whole
-    distributed loop (the AQE-broadcast-threshold idea applied to graph
-    connectivity), and the mapping goes back as a LocalRelation in the
-    edge columns' own type; otherwise the O(log n)-round star CC runs.
-    Isolated nodes never appear (callers left-join + coalesce)."""
+def connected_components(edges: DataFrame) -> DataFrame:
+    """(node, component) for every node on an ``(src, dst)`` edge
+    (undirected as given); component = the component's minimum node, in
+    Spark's order of the node type — a struct node orders field by field,
+    which is how canonicalization gets its min-(name, id) representative.
+    Isolated nodes never appear: callers left-join + coalesce.
+
+    A single-job ``driver.bounded_rows`` probe of DRIVER_CC_MAX_EDGES + 1
+    edges; when they fit, :func:`union_find_roots` runs on them and the
+    mapping goes back as a LocalRelation typed like ``src``
+    (``driver.local_relation``: no Python worker for its consumers).
+    Otherwise the large/small-star loop runs (:func:`_star_components`)."""
     from pyspark import StorageLevel
 
     ep = edges.select("src", "dst")  # probe/scan width: two columns only
@@ -156,39 +90,34 @@ def adaptive_component_mapping(edges: DataFrame,
     own_persist = str(edges.storageLevel) == str(StorageLevel.NONE)
     if own_persist:
         ep = ep.persist(StorageLevel.MEMORY_AND_DISK)
-    head = bounded_rows(ep, driver_max_edges)
-    if len(head) <= driver_max_edges:
-        if own_persist:
-            ep.unpersist()
-        roots = union_find_roots((r.src, r.dst) for r in head)
-        return local_relation(edges.sparkSession, list(roots.items()),
-                              ("node", "component"),
-                              edges.schema["src"].dataType)
-    nodes = (ep.select(F.col("src").alias("node"))
-             .unionByName(ep.select(F.col("dst").alias("node")))
-             .distinct())
     try:
-        return connected_components_star(nodes, ep)
+        head = bounded_rows(ep, DRIVER_CC_MAX_EDGES)
+        if len(head) > DRIVER_CC_MAX_EDGES:
+            return _star_components(ep)
     finally:
         if own_persist:
             ep.unpersist()
+    dtype = edges.schema["src"].dataType
+    if isinstance(dtype, T.StructType):
+        # Arrow hands struct values over as dicts (field order kept): as
+        # tuples they hash, and compare like Spark orders non-null structs
+        roots = union_find_roots((tuple(r.src.values()), tuple(r.dst.values()))
+                                 for r in head)
+    else:
+        roots = union_find_roots((r.src, r.dst) for r in head)
+    return local_relation(edges.sparkSession, list(roots.items()),
+                          ("node", "component"), dtype)
 
 
-def connected_components_star(nodes: DataFrame, edges: DataFrame,
-                              max_iters: int = 20) -> DataFrame:
-    """Alternating large-star/small-star connected components — the
-    O(log n)-round algorithm (Kiveris et al., "Connected Components in
-    MapReduce and Beyond", SoCC'14) for graphs whose components may be
-    chain-shaped, where min-label propagation's O(diameter) rounds is the
-    scale risk. Every round is two groupBy+join passes over the edge
-    relation; convergence = stable edge multiset (same probabilistic
-    hash-sum check as :func:`connected_components`).
+def _star_components(edges: DataFrame) -> DataFrame:
+    """The distributed path of :func:`connected_components`: alternating
+    large-star/small-star over ``(src, dst)`` edges.
 
     large-star: every neighbor v > u of node u re-attaches to
     m = min(N(u) + {u}); small-star: every neighbor v <= u (and u itself)
     attaches to m. At the fixpoint the edge set is a star forest mapping
-    each node directly to its component minimum. Returns
-    (node, component)."""
+    each node directly to its component minimum. Raises RuntimeError when
+    CC_MAX_ROUNDS rounds end before the edge multiset is stable."""
     from pyspark import StorageLevel
 
     def _sym(e: DataFrame) -> DataFrame:
@@ -209,11 +138,15 @@ def connected_components_star(nodes: DataFrame, edges: DataFrame,
         ).collect()[0]
         return (row["n"], row["s"])
 
+    nodes = (edges.select(F.col("src").alias("node"))
+             .unionByName(edges.select(F.col("dst").alias("node")))
+             .distinct())
     E = (edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
          .filter(F.col("u") != F.col("v")).distinct()
          .persist(StorageLevel.MEMORY_AND_DISK))
     prev_sig = _sig(E)
-    for i in range(max_iters):
+    converged = False
+    for _ in range(CC_MAX_ROUNDS):
         # large-star
         sym = _sym(E)
         m = _mins(sym)
@@ -241,10 +174,17 @@ def connected_components_star(nodes: DataFrame, edges: DataFrame,
         E = E2
         old.unpersist()
         if sig == prev_sig:
+            converged = True
             break
         prev_sig = sig
-    # at the fixpoint each node has exactly one parent (the component min);
-    # the min-agg is a cheap guard for max_iters exhaustion mid-converge
+    if not converged:
+        # falling out of the loop mid-merge would silently UNDER-MERGE
+        # (several labels inside one component) — fail loudly instead
+        E.unpersist()
+        raise RuntimeError(
+            f"connected_components did not converge in {CC_MAX_ROUNDS} "
+            f"large/small-star rounds")
+    # at the fixpoint each node has exactly one parent (the component min)
     mapping = (E.groupBy(F.col("u").alias("node"))
                .agg(F.min("v").alias("component")))
     labels = (nodes.join(mapping, "node", "left")
@@ -356,11 +296,10 @@ def pagerank(edges: DataFrame, iters: int = 5,
     once, persisted in that shuffle layout, and reused every iteration —
     only the (tiny, one-row-per-node) rank relation shuffles per round;
     this is the canonical Spark PageRank partitioning strategy. Lineage is
-    truncated with localCheckpoint every 8 rounds (same cadence as
-    :func:`connected_components`). With damping 0.5 and power-of-two
-    out-degrees every rank is a dyadic rational — exactly representable in
-    (and exactly summable over) doubles, which is what lets the DuckDB
-    oracle match bit-for-bit."""
+    truncated with localCheckpoint every 8 rounds. With damping 0.5 and
+    power-of-two out-degrees every rank is a dyadic rational — exactly
+    representable in (and exactly summable over) doubles, which is what
+    lets the DuckDB oracle match bit-for-bit."""
     from pyspark import StorageLevel
 
     nodes = (edges.select(F.col("src").alias("node"))
@@ -424,8 +363,8 @@ def pagerank(edges: DataFrame, iters: int = 5,
         if dangling or (i + 1) % 8 == 0:
             ranks = ranks.localCheckpoint()
     # materialize the result, then release the loop's caches — repeated
-    # harness calls must not accumulate cached nodes/adj relations (same
-    # discipline as connected_components; review fix).
+    # harness calls must not accumulate cached nodes/adj relations (review
+    # fix).
     # materialize=False keeps the lazy plan (and the caches, which the
     # caller then owns) — used by the plan test that pins the
     # persisted-adjacency reuse the checkpoint would otherwise hide.
@@ -525,7 +464,7 @@ def label_propagation(edges: DataFrame, rounds: int = 3,
     from pyspark import StorageLevel
     from pyspark.sql import Window
 
-    und = _symmetrize(edges, drop_self_loops=True)
+    und = _symmetrize(edges)
     if materialize:
         # persist only when we'll also unpersist below: materialize=False
         # callers (plan tests, repeated harness calls) would otherwise

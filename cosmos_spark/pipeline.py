@@ -43,7 +43,7 @@ from pyspark.sql import types as T
 
 from . import kernels as K
 from .driver import bounded_rows, local_relation
-from .operators.graph import connected_components_star, union_find_roots
+from .operators.graph import connected_components, union_find_roots
 
 SEGMENT_SCHEMA = T.StructType([
     T.StructField("repo", T.StringType()),
@@ -404,20 +404,6 @@ def canon_bucket_edges(bands: DataFrame) -> DataFrame:
                     F.greatest("ea", "eb").alias("id_b")))
 
 
-def _union_find_mapping(edges, name: dict[str, str]) -> list[tuple[str, str]]:
-    """Union-find over (id_a, id_b) edges. Returns only the non-identity
-    (entity_id, canonical_id) mappings; representative = min
-    (canonical_name, entity_id) per component."""
-    members: dict[str, list[str]] = {}
-    for i, root in union_find_roots(edges).items():
-        members.setdefault(root, []).append(i)
-    mapping: list[tuple[str, str]] = []
-    for ms in members.values():
-        rep = min(ms, key=lambda m: (name[m], m))
-        mapping.extend((m, rep) for m in ms if m != rep)
-    return mapping
-
-
 def _driver_canonical_mapping(rows) -> list[tuple[str, str]]:
     """Driver-side twin of :func:`canon_bands` + :func:`canon_bucket_edges`
     + union-find, run when the entities dim itself fits on the driver
@@ -430,25 +416,24 @@ def _driver_canonical_mapping(rows) -> list[tuple[str, str]]:
     same ones exceed CANON_MAX_BUCKET and are dropped, and the candidates
     are verified by the same exact trigram Jaccard >= CANON_THRESHOLD.
     Only the bucket grouping, pair enumeration, verify and union-find
-    (min-(name, id) representatives) run in Python — the mapping equals
-    the distributed levels' pair for pair. Trigram sets are held as int
-    bitmasks over a per-call trigram numbering, so a verify is one AND +
-    popcount (|A|+|B|-|A&B| is the union size). Measured on the
-    6.9k-row vocabulary dim (1.4e5 candidate pairs, one core of a 4-core
-    x86-64 host): 0.05 s against 0.34 s for set intersection + union."""
-    ids: list[str] = []
+    over (name, id) nodes (so a root is the min-(name, id) representative)
+    run in Python — the mapping equals the distributed levels' pair for
+    pair. Trigram sets are held as int bitmasks over a per-call trigram
+    numbering, so a verify is one AND + popcount (|A|+|B|-|A&B| is the
+    union size). Measured on the 6.9k-row vocabulary dim (1.4e5 candidate
+    pairs, one core of a 4-core x86-64 host): 0.05 s against 0.34 s for
+    set intersection + union."""
+    nodes: list[tuple[str, str]] = []
     masks: list[int] = []
-    name_of: dict[str, str] = {}
     trigram_bit: dict[str, int] = {}
     buckets: dict[tuple[int, int], list[int]] = {}
     for r in rows:
         if not r.tg:  # canon_bands' size(tg) > 0 filter
             continue
-        i = len(ids)
-        ids.append(r.entity_id)
+        i = len(nodes)
+        nodes.append((r.canonical_name, r.entity_id))
         masks.append(sum({1 << trigram_bit.setdefault(t, len(trigram_bit))
                           for t in r.tg}))
-        name_of[r.entity_id] = r.canonical_name
         for band, bval in enumerate(r.sig):
             buckets.setdefault((band, bval), []).append(i)
 
@@ -465,11 +450,11 @@ def _driver_canonical_mapping(rows) -> list[tuple[str, str]]:
     for a, c in cand:
         inter = (masks[a] & masks[c]).bit_count()
         if inter / (sizes[a] + sizes[c] - inter) >= thr:
-            edges.append((ids[a], ids[c]))
-    return _union_find_mapping(edges, name_of)
+            edges.append((nodes[a], nodes[c]))
+    return [(n[1], root[1]) for n, root in union_find_roots(edges).items()
+            if n != root]
 
 
-CANON_DRIVER_CC_MAX_EDGES = 200_000
 CANON_DRIVER_DIM_MAX = 500_000
 _MAPPING_COLUMNS = ("entity_id", "canonical_id")
 
@@ -480,53 +465,30 @@ def canon_mapping(edges: DataFrame, names: DataFrame) -> DataFrame:
     (canonical_name, entity_id) per component, ``names`` supplying
     (entity_id, canonical_name).
 
-    Adaptive: a single-job probe (:func:`driver.bounded_rows`) reads up to
-    CANON_DRIVER_CC_MAX_EDGES + 1 name-joined edges, persisted first so
-    the overflow branch reuses them. When they fit, union-find runs on the
-    driver and the mapping goes back as a broadcast LocalRelation
+    The edges go to :func:`operators.graph.connected_components` with
+    ``struct(canonical_name, entity_id)`` nodes, so each component's
+    minimum node is its representative. On the operator's driver path the
+    mapping goes back as a broadcast LocalRelation
     (:func:`driver.local_relation`: its consumers read it in the JVM, no
-    Python worker, no shuffle). Otherwise the iterative large/small-star
-    CC (:mod:`operators.graph`) runs over only the edge-incident nodes:
-    name-similarity components can be chain-shaped (a~b~c with a!~c),
-    where min-label propagation would need O(chain length) rounds —
-    large/small-star needs O(log n)."""
-    from pyspark import StorageLevel
-
-    cap = CANON_DRIVER_CC_MAX_EDGES
-    nm = names.select("entity_id", "canonical_name")
-    ej = (edges.select("id_a", "id_b")
-          .join(nm.select(F.col("entity_id").alias("id_a"),
-                          F.col("canonical_name").alias("name_a")), "id_a")
-          .join(nm.select(F.col("entity_id").alias("id_b"),
-                          F.col("canonical_name").alias("name_b")), "id_b")
-          .select("id_a", "name_a", "id_b", "name_b")
-          .persist(StorageLevel.MEMORY_AND_DISK))
-    head = bounded_rows(ej, cap)
-    if len(head) <= cap:
-        ej.unpersist()
-        name = {}
-        for r in head:
-            name[r.id_a], name[r.id_b] = r.name_a, r.name_b
-        return F.broadcast(local_relation(
-            edges.sparkSession,
-            _union_find_mapping([(r.id_a, r.id_b) for r in head], name),
+    Python worker, no shuffle)."""
+    node = F.struct("canonical_name", "entity_id")
+    nm = names.select("entity_id", node.alias("n"))
+    cc = connected_components(
+        edges.select("id_a", "id_b")
+        .join(nm.select(F.col("entity_id").alias("id_a"),
+                        F.col("n").alias("src")), "id_a")
+        .join(nm.select(F.col("entity_id").alias("id_b"),
+                        F.col("n").alias("dst")), "id_b"))
+    out = (cc.select(F.col("node.entity_id").alias("entity_id"),
+                     F.col("component.entity_id").alias("canonical_id"))
+           .filter(F.col("entity_id") != F.col("canonical_id")))
+    if cc.isLocal():
+        # the driver path's LocalRelation, rebuilt with the mapping's own
+        # columns so level 2 attaches it like level 1; collecting a local
+        # plan runs no Spark job
+        out = F.broadcast(local_relation(
+            edges.sparkSession, [tuple(r) for r in out.collect()],
             _MAPPING_COLUMNS))
-    cc = connected_components_star(
-        ej.select(F.col("id_a").alias("node"))
-        .unionByName(ej.select(F.col("id_b").alias("node"))).distinct(),
-        ej.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")))
-    lab = cc.join(nm, cc["node"] == nm["entity_id"]).select(
-        "node", "component", "canonical_name")
-    rep = (lab.groupBy("component")
-           .agg(F.min(F.struct("canonical_name",
-                               F.col("node").alias("eid"))).alias("r"))
-           .select("component", F.col("r.eid").alias("canonical_id")))
-    out = (lab.join(rep, "component")
-           .filter(F.col("node") != F.col("canonical_id"))
-           .select(F.col("node").alias("entity_id"), "canonical_id"))
-    # star CC localCheckpoints eagerly per round, so the persisted edges
-    # are fully consumed by the time it returns (cache-leak fix, ADVICE r2)
-    ej.unpersist()
     return out
 
 
@@ -538,8 +500,8 @@ def canonicalize(entities: DataFrame) -> DataFrame:
     Edges come from MinHash-band blocking + exact verify — recall-safe
     across name prefixes. The whole step is *adaptive*, the same runtime
     size-switch AQE applies to join strategies, with a three-level cascade
-    whose driver bounds (CANON_DRIVER_DIM_MAX, CANON_DRIVER_CC_MAX_EDGES)
-    are read at call time:
+    whose driver bounds (CANON_DRIVER_DIM_MAX here,
+    ``operators.graph.DRIVER_CC_MAX_EDGES``) are read at call time:
 
     1. The entities dim (one row per distinct normalized def name — orders
        smaller than the corpus) is probed for CANON_DRIVER_DIM_MAX + 1 rows
@@ -553,11 +515,11 @@ def canonicalize(entities: DataFrame) -> DataFrame:
        broadcast LocalRelation (zero shuffles added downstream).
     2. Otherwise the distributed :func:`canon_bands` +
        :func:`canon_bucket_edges` plan builds the verified edges, and
-       :func:`canon_mapping` turns them into the mapping: driver
-       union-find while they fit CANON_DRIVER_CC_MAX_EDGES (a broadcast
-       LocalRelation again),
-    3. else the iterative large/small-star CC over only the edge-incident
-       nodes (isolated entities never enter the loop).
+       :func:`canon_mapping` turns them into the mapping through
+       ``operators.graph.connected_components``: driver union-find while
+       they fit DRIVER_CC_MAX_EDGES (a broadcast LocalRelation again),
+    3. else that operator's large/small-star loop over only the
+       edge-incident nodes (isolated entities never enter the loop).
 
     All levels block on the same signature values and drop the same
     over-cap buckets, so they return the same mapping.

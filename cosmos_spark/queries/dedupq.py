@@ -139,10 +139,11 @@ FROM mh
 # ---------------------------------------------------------------------------
 
 def q_cc_components(spark, sf_dir):
-    """General iterative connected components (operators.graph — the
-    min-label-propagation loop, SURVEY §2.4 G1/G5 scale path) over star
-    edges linking docs that share a fingerprint; component = min doc_id,
-    which the oracle reproduces relationally."""
+    """Connected components (operators.graph.connected_components, SURVEY
+    §2.4 G1/G5) over star edges linking docs that share a fingerprint;
+    component = min doc_id, which the oracle reproduces relationally.
+    Docs without an edge (a fingerprint of their own) are their own
+    component."""
     from ..operators import graph
     docs = _t(spark, sf_dir, "documents")
     from ..operators import dedup as _dd
@@ -156,13 +157,16 @@ def q_cc_components(spark, sf_dir):
     edges = (star.filter(F.col("doc_id") != F.col("head"))
              .select(F.col("head").alias("src"),
                      F.col("doc_id").alias("dst")))
-    nodes = fp.select(F.col("doc_id").alias("node"))
-    cc = graph.connected_components(nodes, edges)
-    # cc is eagerly materialized (localCheckpoint) by the loop above, so the
-    # fingerprint cache can be released before the result is consumed.
+    cc = graph.connected_components(edges)
+    out = (fp.select(F.col("doc_id").alias("node"))
+           .join(cc, "node", "left")
+           .select(F.col("node").alias("doc_id"),
+                   F.coalesce("component", "node").alias("component_id"))
+           .localCheckpoint(eager=True))
+    # materialized above, so the fingerprint cache can be released before
+    # the result is consumed
     fp.unpersist()
-    return cc.select(F.col("node").alias("doc_id"),
-                     F.col("component").alias("component_id"))
+    return out
 
 
 SQL_CC_COMPONENTS = r"""

@@ -12,6 +12,7 @@ from conftest import python_rdd_scans
 
 from cosmos_spark import pipeline as P
 from cosmos_spark.corpus import _sha, corpus_to_spark, make_corpus
+from cosmos_spark.operators import graph
 from cosmos_spark.pipeline import run_pipeline
 from cosmos_spark.plans import incremental as inc
 from cosmos_spark.sources import Catalog
@@ -353,7 +354,7 @@ def test_clustered_layout_surgery_matches_unclustered(spark, v0_pdf, v1_pdf,
     bit-identical to the unclustered layout's, and the surgery's
     stored-table reads plan as _bucket partition pruning. The update runs
     the surgery's mapping through the distributed star-CC branch
-    (CANON_DRIVER_CC_MAX_EDGES=0), and no canonicalization write of the
+    (graph.DRIVER_CC_MAX_EDGES=0), and no canonicalization write of the
     build or the update reads a Python RDD."""
     cat_c = Catalog(spark, str(tmp_path_factory.mktemp("incwh_cl")))
     v0 = corpus_to_spark(spark, v0_pdf, partitions=4)
@@ -369,10 +370,10 @@ def test_clustered_layout_surgery_matches_unclustered(spark, v0_pdf, v1_pdf,
     deleted = [("org0/repo_00", "extra/dead1.py"),
                ("org1/repo_01", "extra/dead2.py")]
     star_runs = []
-    star = P.connected_components_star
+    star = graph._star_components
     with monkeypatch.context() as m:
-        m.setattr(P, "CANON_DRIVER_CC_MAX_EDGES", 0)
-        m.setattr(P, "connected_components_star",
+        m.setattr(graph, "DRIVER_CC_MAX_EDGES", 0)
+        m.setattr(graph, "_star_components",
                   lambda *a, **kw: star_runs.append(1) or star(*a, **kw))
         stats = inc.update_graph(spark, cat_c, v1, deleted=deleted,
                                  canon_mode="incremental")

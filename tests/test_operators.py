@@ -66,31 +66,6 @@ def test_near_dedup_end_to_end(docs):
         assert bool(out.loc[d, "keep"])
 
 
-def test_adaptive_component_mapping_paths_agree(spark):
-    """The driver union-find path and the forced star-CC path produce the
-    identical (node, component) mapping, for long and for string node
-    ids; the driver path hands it back as a JVM LocalRelation in the edge
-    columns' own type, never a Python RDD scan."""
-    from conftest import python_rdd_scans
-    cases = [
-        ({"src": [1, 2, 10, 11], "dst": [2, 3, 11, 12]},
-         {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10}),
-        ({"src": ["b", "c", "x", "y"], "dst": ["a", "b", "y", "z"]},
-         {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x", "z": "x"}),
-    ]
-    for cols, want in cases:
-        edges = spark.createDataFrame(pd.DataFrame(cols))
-        driver = graph.adaptive_component_mapping(edges)
-        assert driver.schema["node"].dataType == edges.schema["src"].dataType
-        assert not python_rdd_scans(driver)
-        a = driver.toPandas()
-        b = graph.adaptive_component_mapping(edges,
-                                             driver_max_edges=0).toPandas()
-        am = dict(zip(a["node"], a["component"]))
-        bm = dict(zip(b["node"], b["component"]))
-        assert am == bm == want
-
-
 def test_compile_search_tree(spark):
     from cosmos_spark import retrieval
     segs = spark.createDataFrame(pd.DataFrame({
@@ -229,46 +204,96 @@ def test_embedding_cosine_dup_pairs(emb):
     assert (0, 5) in got
 
 
-def test_iterative_cc(spark):
-    nodes = spark.createDataFrame(
-        pd.DataFrame({"node": ["a", "b", "c", "d", "e"]}))
-    edges = spark.createDataFrame(
-        pd.DataFrame({"src": ["a", "b", "d"], "dst": ["b", "c", "e"]}))
-    out = graph.connected_components(nodes, edges).toPandas()
-    comp = dict(zip(out["node"], out["component"]))
-    assert comp["a"] == comp["b"] == comp["c"] == "a"
-    assert comp["d"] == comp["e"] == "d"
+def _components_reference(edges) -> dict:
+    """node -> min node of its component, by naive relabelling: every
+    edge whose ends carry different labels moves the larger label's whole
+    class onto the smaller one."""
+    comp: dict = {}
+    for a, b in edges:
+        comp.setdefault(a, a)
+        comp.setdefault(b, b)
+        lo, hi = sorted((comp[a], comp[b]))
+        if lo != hi:
+            for v, c in comp.items():
+                if c == hi:
+                    comp[v] = lo
+    return comp
 
 
-def test_star_cc_matches_min_label(spark):
-    """large/small-star CC agrees with min-label CC on mixed graphs."""
+_CC_NODE_KINDS = {
+    "long": ("bigint", lambda i: i),
+    "string": ("string", lambda i: f"n{i:02d}"),
+    # names out of id order: the min node is the min (name, id) pair
+    "struct": ("struct<canonical_name:string,entity_id:string>",
+               lambda i: (f"x{(37 * i) % 41:02d}", f"e{i:02d}")),
+}
+
+
+@pytest.mark.parametrize("path", ["driver", "star"])
+@pytest.mark.parametrize("kind", list(_CC_NODE_KINDS))
+def test_connected_components_matches_union_find(spark, monkeypatch,
+                                                 kind, path):
+    """The one CC operator, on its driver union-find path and on its
+    forced large/small-star path, over long, string and
+    struct(name, id) nodes: a chain, a star, a random clump and a
+    self-loop give a pure-Python reference's components (min node per
+    component); isolated nodes, attached by the caller with a left join
+    + coalesce, are their own component. The result keeps the node type
+    and never scans a Python RDD."""
     import random
+
+    from conftest import python_rdd_scans
+    sql_type, node = _CC_NODE_KINDS[kind]
     rng = random.Random(7)
-    ns = [f"n{i:02d}" for i in range(30)]
-    es = [(ns[i], ns[i + 1]) for i in range(0, 8)]          # chain
-    es += [("n20", x) for x in ("n21", "n22", "n23")]       # star
-    es += [(ns[rng.randrange(24, 30)], ns[rng.randrange(24, 30)])
-           for _ in range(6)]                               # random clump
-    nodes = spark.createDataFrame(pd.DataFrame({"node": ns}))
-    edges = spark.createDataFrame(
-        pd.DataFrame(es, columns=["src", "dst"]))
-    a = graph.connected_components(nodes, edges).toPandas()
-    b = graph.connected_components_star(nodes, edges).toPandas()
-    assert (dict(zip(a["node"], a["component"]))
-            == dict(zip(b["node"], b["component"])))
+    es = [(i, i + 1) for i in range(8)]                          # chain
+    es += [(20, x) for x in (21, 22, 23)]                        # star
+    es += [(rng.randrange(24, 30), rng.randrange(24, 30))
+           for _ in range(6)]                                    # clump
+    es += [(35, 35)]                                             # self-loop
+    es = [(node(a), node(b)) for a, b in es]
+    want = _components_reference(es)
+    isolated = [node(i) for i in range(36, 40)]
+    want.update((v, v) for v in isolated)
+
+    if path == "star":
+        monkeypatch.setattr(graph, "DRIVER_CC_MAX_EDGES", 0)
+    edges = spark.createDataFrame(es, f"src {sql_type}, dst {sql_type}")
+    cc = graph.connected_components(edges)
+    assert cc.isLocal() == (path == "driver")
+    assert cc.schema["node"].dataType == edges.schema["src"].dataType
+    assert not python_rdd_scans(cc)
+    nodes = spark.createDataFrame([(v,) for v in want], f"node {sql_type}")
+    out = (nodes.join(cc, "node", "left")
+           .select("node", F.coalesce("component", "node")
+                   .alias("component")).collect())
+    key = tuple if kind == "struct" else (lambda v: v)
+    got = {key(r.node): key(r.component) for r in out}
+    assert got == want
 
 
-def test_star_cc_chain_converges_in_log_rounds(spark):
-    """A 64-node chain: min-label needs O(64) rounds; star CC must finish
-    within its default O(log n) budget and label everything n00."""
+def test_star_cc_chain_converges_in_log_rounds(spark, monkeypatch):
+    """A 64-node chain down the distributed path: large/small-star must
+    finish within an O(log n) round budget and label everything n00."""
     ns = [f"n{i:02d}" for i in range(64)]
-    nodes = spark.createDataFrame(pd.DataFrame({"node": ns}))
     edges = spark.createDataFrame(pd.DataFrame(
         [(ns[i], ns[i + 1]) for i in range(63)], columns=["src", "dst"]))
-    out = graph.connected_components_star(nodes, edges,
-                                          max_iters=10).toPandas()
+    monkeypatch.setattr(graph, "DRIVER_CC_MAX_EDGES", 0)
+    monkeypatch.setattr(graph, "CC_MAX_ROUNDS", 10)
+    out = graph.connected_components(edges).toPandas()
     assert set(out["component"]) == {"n00"}
     assert len(out) == 64
+
+
+def test_cc_round_cap_raises(spark, monkeypatch):
+    """A large/small-star loop that runs out of rounds before the edge set
+    is stable must raise, not return a partly merged mapping (several
+    labels inside one chain)."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "src long, dst long")
+    monkeypatch.setattr(graph, "DRIVER_CC_MAX_EDGES", 0)
+    monkeypatch.setattr(graph, "CC_MAX_ROUNDS", 2)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        graph.connected_components(edges)
 
 
 def test_degrees_small(spark):
@@ -1088,23 +1113,6 @@ def test_quantile_sketch_null_ids_skipped(spark):
 # ---------------------------------------------------------------------------
 # graph analytics review fixes
 # ---------------------------------------------------------------------------
-
-def test_cc_nonconvergence_raises_star_succeeds(spark):
-    """Review fix: min-label CC falling out of max_iters used to return
-    silently under-merged components; now it raises and points at the
-    diameter-independent star variant, which solves the same chain."""
-    import pytest as _pt
-
-    from cosmos_spark.operators import graph
-    n = 12
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "src long, dst long")
-    nodes = spark.range(n).select(F.col("id").alias("node"))
-    with _pt.raises(RuntimeError, match="did not converge"):
-        graph.connected_components(nodes, edges, max_iters=3)
-    out = graph.connected_components_star(nodes, edges)
-    assert {r["component"] for r in out.collect()} == {0}
-
 
 def test_pagerank_releases_caches(spark):
     """Review fix: pagerank materializes its result and unpersists the

@@ -121,6 +121,7 @@ def test_canonicalize_all_three_branches_agree(spark, source_df,
     driver union-find (forced via CANON_DRIVER_DIM_MAX=0), (3) distributed
     iterative star-CC (forced via both driver bounds =0)."""
     from cosmos_spark import pipeline as P
+    from cosmos_spark.operators import graph
     mentions = P.mentions_of(P.segments_of(source_df))
     entities = P.entities_of(mentions).cache()
     a = P.canonicalize(entities).select(
@@ -128,7 +129,7 @@ def test_canonicalize_all_three_branches_agree(spark, source_df,
     monkeypatch.setattr(P, "CANON_DRIVER_DIM_MAX", 0)
     b = P.canonicalize(entities).select(
         "entity_id", "canonical_id").toPandas()
-    monkeypatch.setattr(P, "CANON_DRIVER_CC_MAX_EDGES", 0)
+    monkeypatch.setattr(graph, "DRIVER_CC_MAX_EDGES", 0)
     c = P.canonicalize(entities).select(
         "entity_id", "canonical_id").toPandas()
     sa = set(zip(a["entity_id"], a["canonical_id"]))
@@ -149,6 +150,7 @@ def test_canonicalize_levels_agree_with_over_cap_buckets(spark, tmp_path,
     family."""
     from cosmos_spark import pipeline as P
     from cosmos_spark.corpus import corpus_to_spark
+    from cosmos_spark.operators import graph
     from cosmos_spark.plans import incremental as I
     from cosmos_spark.sources.catalog import Catalog
     from perfbench.vocab_corpus import vocab_rows
@@ -166,19 +168,19 @@ def test_canonicalize_levels_agree_with_over_cap_buckets(spark, tmp_path,
                .agg(F.max("count")).first()[0])
     assert biggest > P.CANON_MAX_BUCKET
 
-    def mapping(**bounds):
+    def mapping(dim_max=P.CANON_DRIVER_DIM_MAX,
+                cc_max=graph.DRIVER_CC_MAX_EDGES):
         with monkeypatch.context() as m:
-            for k, v in bounds.items():
-                m.setattr(P, k, v)
+            m.setattr(P, "CANON_DRIVER_DIM_MAX", dim_max)
+            m.setattr(graph, "DRIVER_CC_MAX_EDGES", cc_max)
             c = P.canonicalize(entities).toPandas()
         c = c[c["entity_id"] != c["canonical_id"]]
         return set(zip(c["entity_id"], c["canonical_id"]))
 
     level1 = mapping()
     assert level1
-    assert level1 == mapping(CANON_DRIVER_DIM_MAX=0)
-    assert level1 == mapping(CANON_DRIVER_DIM_MAX=0,
-                             CANON_DRIVER_CC_MAX_EDGES=0)
+    assert level1 == mapping(dim_max=0)
+    assert level1 == mapping(dim_max=0, cc_max=0)
 
     def same_as(t):
         return set(map(tuple, t.filter(F.col("pred") == "same_as")
